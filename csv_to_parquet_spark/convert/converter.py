@@ -222,13 +222,15 @@ def infer_file_schema(
 
 def _single_file_output(tmp_dir: str, final_path: str) -> None:
     """Promote Spark's part-file to a single <base>.parquet (K2 parity —
-    the reference maps 1 CSV → 1 parquet file, converter.go:107-114)."""
+    the reference maps 1 CSV → 1 parquet file, converter.go:107-114).
+
+    One same-directory ``os.replace`` (the temp dir sits beside the
+    final path): a reader sees the old file or the new one, never
+    neither, and a failed promote leaves the old output in place."""
     parts = [p for p in glob.glob(os.path.join(tmp_dir, "part-*")) if not p.endswith(".crc")]
     if len(parts) != 1:
         raise RuntimeError(f"expected exactly one part file in {tmp_dir}, got {parts}")
-    if os.path.exists(final_path):
-        os.remove(final_path)
-    shutil.move(parts[0], final_path)
+    os.replace(parts[0], final_path)
     shutil.rmtree(tmp_dir, ignore_errors=True)
 
 

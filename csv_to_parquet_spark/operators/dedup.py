@@ -42,7 +42,11 @@ from csv_to_parquet_spark.functions import (
     tokenize,
 )
 from csv_to_parquet_spark.operators import Catalog
-from csv_to_parquet_spark.sources.tables import load_table, spread
+from csv_to_parquet_spark.sources.tables import (
+    load_table,
+    parquet_row_count,
+    spread,
+)
 
 CAT = Catalog()
 
@@ -222,9 +226,7 @@ class _CappedIndex(NamedTuple):
     one place."""
 
     sh: DataFrame  #: persisted (doc_id, sh) distinct pairs
-    dfreq: DataFrame  #: (sh, df) document frequencies
     stops: DataFrame  #: persisted (sh, is_stop) stop-shingles (df > cap)
-    idx: DataFrame  #: sh minus stop-shingles — the joinable index
     info: DataFrame  #: persisted (doc_id, n_sh, capped_sh array) per doc
     docs: DataFrame  #: (sh, docs sorted array) per indexable shingle, ≥2 docs
 
@@ -290,7 +292,7 @@ def _capped_index(sh: DataFrame, df_cap: int) -> _CappedIndex:
         .agg(F.sort_array(F.collect_list("doc_id")).alias("docs"))
         .filter(F.size("docs") >= 2)
     )
-    return _CappedIndex(sh, dfreq, stops, idx, info, docs)
+    return _CappedIndex(sh, stops, info, docs)
 
 
 def ngram_jaccard_pairs(
@@ -1303,25 +1305,14 @@ def _cos_blocks(sf_dir: str) -> int:
     """Block count for :func:`dedup_embedding_cosine` — read the
     embeddings row count from the parquet FOOTER metadata (pyarrow, no
     Spark job, sub-millisecond) and size B so each of the B buckets
-    holds at most ~_COS_BLOCK_ROWS vectors. Footer-unreadable paths
-    fall back to the floor: wrong B is a performance knob, never a
-    correctness one (every B produces the identical pair set)."""
-    import glob
+    holds at most ~_COS_BLOCK_ROWS vectors. An unknown count (remote,
+    missing, unreadable or corrupt; see parquet_row_count) falls back
+    to the floor: wrong B is a performance knob, never a correctness
+    one (every B produces the identical pair set)."""
     import math
     import os
 
-    import pyarrow.parquet as pq
-
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        files = (
-            [path]
-            if os.path.isfile(path)
-            else glob.glob(os.path.join(path, "*.parquet"))
-        )
-        n = sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-    except OSError:
-        n = 0
+    n = parquet_row_count(os.path.join(sf_dir, "embeddings.parquet")) or 0
     return max(_COS_BLOCKS_MIN, math.ceil(n / _COS_BLOCK_ROWS))
 
 

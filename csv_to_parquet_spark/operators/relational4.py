@@ -267,15 +267,15 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     is shipped > 60 days after o_orderdate in place of
     l_receiptdate > l_commitdate.)
 
-    The F-order lineitem projection is computed once, checkpointed,
-    and reused for all three roles (l1/l2/l3) — the two self-joins
-    then shuffle only (orderkey, suppkey, late) triples, never the
-    full fact row. Both existence joins share the same orderkey
-    shuffle key. The supplier dimension broadcasts; the final
-    count-per-supplier is a tiny aggregate planned as
-    TakeOrderedAndProject."""
+    The F-order lineitem projection is computed once, persisted
+    (tracked, so release_caches() drops it), and reused for all three
+    roles (l1/l2/l3) — the two self-joins then shuffle only (orderkey,
+    suppkey, late) triples, never the full fact row. Both existence
+    joins share the same orderkey shuffle key. The supplier dimension
+    broadcasts; the final count-per-supplier is a tiny aggregate
+    planned as TakeOrderedAndProject."""
     o_f = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
-    lif = (
+    lif = persist_tracked(
         _t(spark, sf_dir, "lineitem")
         .join(o_f, F.col("l_orderkey") == F.col("o_orderkey"))
         .select(
@@ -283,7 +283,6 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             "l_suppkey",
             (F.col("l_shipdate") > F.date_add("o_orderdate", 60)).alias("late"),
         )
-        .localCheckpoint(eager=False)
     )
     s1 = (
         _t(spark, sf_dir, "supplier")

@@ -582,7 +582,7 @@ def ps_pandas_api_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     prev = ps.get_option("compute.default_index_type")
     ps.set_option("compute.default_index_type", "distributed")
     try:
-        psdf = spark.read.parquet(f"{sf_dir}/orders.parquet")[
+        psdf = load_table(spark, sf_dir, "orders")[
             ["o_orderpriority", "o_totalprice"]
         ].pandas_api()
         psdf["cents"] = (

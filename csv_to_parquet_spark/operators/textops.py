@@ -30,7 +30,11 @@ from csv_to_parquet_spark.functions import (
 )
 from csv_to_parquet_spark.operators import Catalog
 from csv_to_parquet_spark.operators.cache import persist_tracked as _persist
-from csv_to_parquet_spark.sources.tables import load_table, spread
+from csv_to_parquet_spark.sources.tables import (
+    load_table,
+    parquet_row_count,
+    spread,
+)
 
 CAT = Catalog()
 
@@ -4318,24 +4322,13 @@ _ULM_KERNEL_MIN_DOCS = 1_000_000
 def _ulm_use_kernel(sf_dir: str) -> bool:
     """True when the corpus is large enough that the Arrow DP kernel
     beats the interpreted fold — decided from the documents parquet
-    FOOTER row count (pyarrow, no Spark job; the _cos_blocks
-    convention). Unreadable paths fall back to the fold."""
-    import glob
+    FOOTER row count (no Spark job; see parquet_row_count). An unknown
+    count (remote, missing, unreadable or corrupt) falls back to the
+    fold."""
     import os
 
-    import pyarrow.parquet as pq
-
-    path = os.path.join(sf_dir, "documents.parquet")
-    try:
-        files = (
-            [path]
-            if os.path.isfile(path)
-            else glob.glob(os.path.join(path, "*.parquet"))
-        )
-        n = sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-    except OSError:
-        return False
-    return n >= _ULM_KERNEL_MIN_DOCS
+    n = parquet_row_count(os.path.join(sf_dir, "documents.parquet"))
+    return n is not None and n >= _ULM_KERNEL_MIN_DOCS
 
 
 def _ulm_viterbi_udf(cost: dict):
@@ -4359,6 +4352,9 @@ def _ulm_viterbi_udf(cost: dict):
         maxp = _ULM_MAXP
         out = []
         for w in ws:
+            if w is None:  # NULL in, NULL out — as the fold
+                out.append(None)
+                continue
             n = len(w)
             dp = [0] + [None] * n
             bk = [0] * (n + 1)

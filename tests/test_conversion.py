@@ -270,3 +270,36 @@ def test_c1_explicit_config_missing_errors(tmp_path, monkeypatch):
         load_settings(["-i", "x.csv", "--config", "nope.yaml"])
     # ...and the missing default path is fine
     assert load_settings(["-i", "x.csv"]).delete_original is True
+
+
+def _staged_promote(tmp_path, n_parts: int):
+    """A temp dir beside final.parquet holding ``n_parts`` part files,
+    with an earlier output already at the final path."""
+    final = tmp_path / "final.parquet"
+    final.write_bytes(b"previous output")
+    tmp = tmp_path / "final.parquet._spark_tmp"
+    tmp.mkdir()
+    (tmp / "_SUCCESS").write_bytes(b"")
+    for i in range(n_parts):
+        (tmp / f"part-{i:05d}.snappy.parquet").write_bytes(f"new output {i}".encode())
+        (tmp / f".part-{i:05d}.snappy.parquet.crc").write_bytes(b"crc")
+    return str(tmp), final
+
+
+@pytest.mark.parametrize("n_parts", [0, 2])
+def test_failed_promote_keeps_the_previous_output(tmp_path, n_parts):
+    from csv_to_parquet_spark.convert.converter import _single_file_output
+
+    tmp, final = _staged_promote(tmp_path, n_parts)
+    with pytest.raises(RuntimeError, match="exactly one part file"):
+        _single_file_output(tmp, str(final))
+    assert final.read_bytes() == b"previous output"
+
+
+def test_promote_replaces_the_previous_output(tmp_path):
+    from csv_to_parquet_spark.convert.converter import _single_file_output
+
+    tmp, final = _staged_promote(tmp_path, 1)
+    _single_file_output(tmp, str(final))
+    assert final.read_bytes() == b"new output 0"
+    assert not os.path.exists(tmp)

@@ -9,6 +9,8 @@ global sort.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from csv_to_parquet_spark.plans.inspect import formatted as _plan
@@ -129,6 +131,26 @@ def test_q21_semi_and_anti_self_joins(spark, sf_smoke, queries):
     assert "LeftAnti" in plan, plan
     assert "BroadcastHashJoin" in plan, plan
     assert "TakeOrderedAndProject" in plan, plan
+
+
+def test_tpch_queries_leave_no_cached_partitions(spark, sf_smoke, queries):
+    """Persist contract: after each of q1–q22 is collected and
+    release_caches() runs, no RDD the query created still holds cached
+    partitions (a localCheckpoint or an untracked persist would)."""
+    from csv_to_parquet_spark.operators.cache import release_caches
+
+    def cached_ids():
+        infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+        return {i.id() for i in infos if i.numCachedPartitions() > 0}
+
+    release_caches()
+    before = cached_ids()
+    names = [n for n in queries if re.match(r"q([1-9]|1[0-9]|2[0-2])_", n)]
+    assert len(names) == 22, names
+    for name in names:
+        queries[name](spark, sf_smoke).collect()
+        release_caches()
+        assert cached_ids() <= before, name
 
 
 def test_q2_broadcasts_dims_and_takes_ordered(spark, sf_smoke, queries):

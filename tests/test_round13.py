@@ -169,6 +169,23 @@ def test_unigram_kernel_segmentation_matches_fold(spark):
         assert "".join(kern[w]) == w
 
 
+def test_unigram_kernel_null_word_is_null(spark):
+    """A NULL word segments to NULL, as in the codegen fold, instead
+    of crashing the Arrow kernel."""
+    from pyspark.sql import functions as F
+
+    from csv_to_parquet_spark.operators.textops import (
+        _ulm_viterbi_pieces,
+        _ulm_viterbi_udf,
+    )
+
+    cost = {"a": 1000, "b": 1000, "ab": 900}
+    wdf = spark.createDataFrame([(None,), ("ab",)], "w STRING")
+    for seg in (_ulm_viterbi_udf(cost), lambda w: _ulm_viterbi_pieces(w, cost)):
+        rows = wdf.select("w", seg(F.col("w")).alias("ps")).collect()
+        assert {r.w: r.ps for r in rows} == {None: None, "ab": ["ab"]}
+
+
 def test_unigram_kernel_gate_reads_footer(sf_smoke, monkeypatch):
     """The gate is decided from the documents parquet footer with no
     Spark job: every driver fixture sits far below the threshold (the
