@@ -4,21 +4,27 @@ Maps the reference's per-file pipeline (converter/converter.go:116-182)
 onto Spark:
 
   discover inputs (S1)  → file / dir glob *.csv
-  pass 1 (I1)           → sample-N inference, exact lattice (inference.py)
+  pass 1 (I1)           → sample-N inference, exact lattice (inference.py):
+                          one grouped sample job per convert_all call
   header cleaning (P1)  → clean_headers (headers.py)
   pass 2 (T1/T2/F1/K1)  → all-string scan → try_cast projection → parquet
-  verify (V1)           → output exists and is non-empty
+  verify (V1)           → output non-empty and its parquet footers
+                          readable; Result.rows from the footers
   delete original (D1)  → optional, --keep inverts
   summary (A1)          → Result fold with byte savings
 
-Like the reference, every file is read twice (sample pass + full pass,
-converter/converter.go:133 vs :328) and each file gets its OWN inferred
-schema. Files convert concurrently — the reference caps 4 goroutines
-(converter/converter.go:91); we submit up to 4 concurrent Spark *jobs*
-from a thread pool, and Spark additionally parallelizes each job across
-all cores/executors by file splits. At cluster scale a single huge CSV
-still converts as a zero-shuffle scan→project→write pipelined across
-executors, O(partition) memory.
+Like the reference, each file gets its OWN schema, inferred from its
+own first rows (converter/converter.go:133), and its full body is read
+once, by the typed pass (:328). Unlike the reference, which samples
+each file in its own pass, ``convert_all`` reads every file's header
+and sample prefix on the driver (serially; O(sample) each), then votes
+all of them in ONE Spark job grouped by file before any write starts
+(``infer_file_schemas``). Files then convert concurrently — the
+reference caps 4 goroutines (converter/converter.go:91); we submit up
+to 4 concurrent Spark *jobs* from a thread pool, and Spark additionally
+parallelizes each job across all cores/executors by file splits. At
+cluster scale a single huge CSV still converts as a zero-shuffle
+scan→project→write pipelined across executors, O(partition) memory.
 """
 
 from __future__ import annotations
@@ -28,19 +34,23 @@ import glob
 import logging
 import os
 import shutil
+import tempfile
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from csv_to_parquet_spark.convert.headers import clean_headers
 from csv_to_parquet_spark.convert.inference import (
+    EMPTY_SAMPLE_KIND,
     InferredColumn,
     cast_column,
     format_schema,
     infer_column_kinds,
 )
+from csv_to_parquet_spark.sources.tables import parquet_row_count
 
 log = logging.getLogger("csv_to_parquet_spark")
 
@@ -171,6 +181,120 @@ def _head_lines(path: str, n: int, charset: str = "UTF-8") -> list[str]:
     return out
 
 
+def infer_file_schemas(
+    spark: SparkSession,
+    paths: list[str],
+    delimiter: str = ",",
+    sample_rows: int = 100,
+    enhanced_dates: bool = False,
+    charset: str = "UTF-8",
+) -> dict[str, list[InferredColumn] | Exception]:
+    """Pass 1: sample-bounded exact-lattice inference (converter.go:185-239)
+    of a batch of files in ONE Spark job (two under AQE).
+
+    Each file's sample is its first ``sample_rows`` records read
+    DRIVER-SIDE and parsed through the SAME Spark CSV reader as the full
+    pass (identical univocity options — PERMISSIVE/quote semantics, the
+    source charset). A ``.limit(n)`` over the file scan looks equivalent
+    but plans a LocalLimit in EVERY split: measured ~0.8 s of 32 task
+    launches each opening the 158 MB file at sf0.1, and at 100 TB it
+    would launch the full scan stage — thousands of tasks to sample 100
+    rows. The prefix read is O(sample) always.
+
+    Every prefix is staged as its own file in one temp directory, read
+    by ONE raw scan at the widest file's column count W with each row
+    tagged by its source file, and voted by one aggregation grouped by
+    file. That equals inferring each file alone: a file with n < W
+    columns reads its first n columns with the same tokenisation as a
+    read at width n (a short row still pads with NULL; extra cells land
+    in columns ≥ n, which that file ignores), and a file whose sample
+    has no data row is absent from the grouped result, so its columns
+    take the empty-sample kind.
+
+    Returns, per path, the file's columns or the exception it raised. A
+    failure reading one file's header or prefix is that file's alone; if
+    the shared job raises, every file is inferred again as a batch of
+    one, so only a file whose own sample makes Spark fail gets an error.
+    A file without header cells has no columns (``[]``).
+    """
+    out: dict[str, list[InferredColumn] | Exception] = {}
+    headers: dict[str, list[str]] = {}
+    staged: dict[str, str] = {}  # staged file name → source path
+    kinds: dict[str, dict[str, str]] = {}
+    failed: Exception | None = None
+    stage = tempfile.mkdtemp(prefix="csv-samples-")
+    try:
+        for i, path in enumerate(paths):
+            try:
+                raw = read_raw_header(path, delimiter, charset)
+                if raw:
+                    # re-encoded in the SOURCE charset so the sample parse
+                    # decodes the exact bytes the full pass will; named by
+                    # index, as Spark skips names starting with _ or .
+                    name = f"{i}.csv"
+                    lines = _head_lines(path, sample_rows + 1, charset)  # +1: header
+                    with open(
+                        os.path.join(stage, name), "w", encoding=charset, newline=""
+                    ) as f:
+                        f.write("\n".join(lines))
+                    staged[name] = path
+                headers[path] = raw
+            except Exception as e:  # this file's failure, raised by convert_file
+                out[path] = e
+        if staged:
+            width = max(len(headers[p]) for p in staged.values())
+            try:
+                kinds = _scan_samples(
+                    spark, stage, staged, width, delimiter, enhanced_dates, charset
+                )
+            except Exception as e:  # contained per file below
+                failed = e
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
+    if failed is not None and len(headers) > 1:
+        # one file's sample must not fail its siblings: infer each alone
+        for path in headers:
+            out.update(
+                infer_file_schemas(
+                    spark, [path], delimiter, sample_rows, enhanced_dates, charset
+                )
+            )
+    elif failed is not None:
+        out.update(dict.fromkeys(headers, failed))
+    else:
+        for path, raw in headers.items():
+            names = clean_headers(raw)
+            got = kinds.get(path, {})
+            out[path] = [
+                InferredColumn(names[i], raw[i], got.get(f"_raw{i}", EMPTY_SAMPLE_KIND))
+                for i in range(len(raw))
+            ]
+    return {p: out[p] for p in paths}
+
+
+def _scan_samples(
+    spark: SparkSession,
+    stage: str,
+    staged: dict[str, str],
+    width: int,
+    delimiter: str,
+    enhanced_dates: bool,
+    charset: str,
+) -> dict[str, dict[str, str]]:
+    """The shared sample job: one raw scan of the staged prefixes in
+    directory ``stage`` (file name → source path in ``staged``) at
+    ``width`` columns, grouped by file → {source path: {raw column: kind}}.
+    The staging is a local directory, NOT sc.parallelize(lines): a
+    Python-RDD-backed CSV scan routes every action through a Python
+    worker round trip (measured ~0.7 s per inference at sf0.1); the
+    file scan is pure JVM."""
+    sample = read_csv_raw(spark, stage, delimiter, width, charset).withColumn(
+        "_file", F.col("_metadata.file_name")
+    )
+    by_file = infer_column_kinds(sample, "_file", enhanced_dates)
+    return {staged[name]: k for name, k in by_file.items()}
+
+
 def infer_file_schema(
     spark: SparkSession,
     path: str,
@@ -179,45 +303,14 @@ def infer_file_schema(
     enhanced_dates: bool = False,
     charset: str = "UTF-8",
 ) -> list[InferredColumn]:
-    """Pass 1: sample-bounded exact-lattice inference (converter.go:185-239).
-
-    The sample is the file's first ``sample_rows`` records read
-    DRIVER-SIDE and parsed through the SAME Spark CSV reader (an RDD
-    of line strings with identical options — univocity parser, same
-    PERMISSIVE/quote semantics). A ``.limit(n)`` over the file scan
-    looks equivalent but plans a LocalLimit in EVERY split: measured
-    ~0.8 s of 32 task launches each opening the 158 MB file at sf0.1,
-    and at 100 TB it would launch the full scan stage — thousands of
-    tasks to sample 100 rows. The prefix read is O(sample) always.
-    """
-    import tempfile
-
-    raw_headers = read_raw_header(path, delimiter, charset)
-    names = clean_headers(raw_headers)
-    lines = _head_lines(path, sample_rows + 1, charset)  # +1: header line
-    # stage the prefix as a tiny local file and parse it through the
-    # SAME file-based reader as the full pass (identical univocity
-    # options). NOT sc.parallelize(lines): a Python-RDD-backed CSV
-    # scan routes every action through a Python worker round trip
-    # (measured ~0.7 s per inference at sf0.1); the one-split file
-    # scan is pure JVM.
-    # the staged prefix is re-encoded in the SOURCE charset so the
-    # sample parse (same reader, same encoding option) decodes the
-    # exact bytes the full pass will
-    with tempfile.NamedTemporaryFile(
-        "w", encoding=charset, suffix=".csv", delete=False, newline=""
-    ) as tf:
-        tf.write("\n".join(lines))
-        tmp = tf.name
-    try:
-        sample = read_csv_raw(spark, tmp, delimiter, len(names), charset)
-        kinds = infer_column_kinds(sample, enhanced_dates=enhanced_dates)
-    finally:
-        os.remove(tmp)
-    return [
-        InferredColumn(name=names[i], raw_name=raw_headers[i], kind=kinds[f"_raw{i}"])
-        for i in range(len(names))
-    ]
+    """One file's schema: :func:`infer_file_schemas` over a batch of one,
+    raising that file's error."""
+    cols = infer_file_schemas(
+        spark, [path], delimiter, sample_rows, enhanced_dates, charset
+    )[path]
+    if isinstance(cols, Exception):
+        raise cols
+    return cols
 
 
 def _single_file_output(tmp_dir: str, final_path: str) -> None:
@@ -251,8 +344,14 @@ def convert_file(
     single_file: bool = True,
     enhanced_dates: bool = False,
     charset: str = "UTF-8",
+    *,
+    schema: list[InferredColumn] | Exception | None = None,
 ) -> Result:
-    """Convert one CSV file (reference convertFile, converter.go:116-182)."""
+    """Convert one CSV file (reference convertFile, converter.go:116-182).
+
+    ``schema`` is the file's entry of an :func:`infer_file_schemas`
+    batch (columns, or the exception its inference raised, which fails
+    this file); None infers the file on its own."""
     t0 = time.monotonic()
     res = Result(input=input_file)
     try:
@@ -260,9 +359,11 @@ def convert_file(
         out = output_path_for(input_file, output_dir)
         res.output = out
 
-        cols = infer_file_schema(
+        cols = schema if schema is not None else infer_file_schema(
             spark, input_file, delimiter, sample_rows, enhanced_dates, charset
         )
+        if isinstance(cols, Exception):
+            raise cols
         log.debug("schema for %s: %s", input_file, format_schema(cols))
 
         typed = read_csv_typed(
@@ -280,7 +381,8 @@ def convert_file(
         if single_file:
             _single_file_output(target, out)
 
-        # V1: verify output exists and is non-empty (converter.go:161-166)
+        # V1: verify output exists and is non-empty (converter.go:161-166),
+        # and that its parquet footers are readable: they give Result.rows
         if single_file:
             res.output_bytes = os.path.getsize(out)
         else:
@@ -289,6 +391,10 @@ def convert_file(
             )
         if res.output_bytes == 0:
             raise RuntimeError(f"output {out} is empty")
+        rows = parquet_row_count(os.path.abspath(out))
+        if rows is None:
+            raise RuntimeError(f"output {out} has no readable parquet footer")
+        res.rows = rows
 
         if delete_original:  # D1, converter.go:169-175
             try:
@@ -317,13 +423,17 @@ def convert_all(
     charset: str = "UTF-8",
 ) -> Summary:
     """Convert a file or a directory of CSVs (reference ConvertAll,
-    converter.go:66-105): each file keeps its own inferred schema, up to
-    ``max_concurrent`` Spark jobs in flight."""
+    converter.go:66-105): each file keeps its own inferred schema, all
+    of them inferred by one Spark job before any write starts, then up
+    to ``max_concurrent`` write jobs in flight."""
     files = discover_inputs(input_path)
     summary = Summary()
     if not files:
         log.warning("no CSV files found in %s", input_path)
         return summary
+    schemas = infer_file_schemas(
+        spark, files, delimiter, sample_rows, enhanced_dates, charset
+    )
 
     def _one(f: str) -> Result:
         return convert_file(
@@ -336,6 +446,7 @@ def convert_all(
             single_file,
             enhanced_dates,
             charset,
+            schema=schemas[f],
         )
 
     with ThreadPoolExecutor(max_workers=max_concurrent) as pool:

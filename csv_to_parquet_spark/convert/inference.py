@@ -25,11 +25,12 @@ classes (bool / int / float-not-int / other) are disjoint:
   all float           → DOUBLE  (ints count as floats)
   anything else mixed → STRING  (covers bool+number, dates, text)
 
-At scale this is O(sample) work: the converter stages the file's
-first n+1 physical lines as a tiny local file (converter.py
-``infer_file_schema`` — a ``limit(n)`` over the full scan would plan a
-LocalLimit into EVERY split), so the single agg is one job over one
-tiny partition regardless of input size.
+At scale this is O(files × sample) work, independent of file size:
+the converter stages each file's first n+1 physical lines as a tiny
+local file (converter.py ``infer_file_schemas`` — a ``limit(n)`` over
+the full scan would plan a LocalLimit into EVERY split) and votes all
+of a batch's samples in ONE aggregation grouped by source file, so a
+directory of any number of files costs one Spark job (two under AQE).
 
 Enhanced (non-parity) mode also probes the reference's six date/time
 layouts (converter/converter.go:264-271) and, when every non-empty
@@ -84,10 +85,20 @@ class InferredColumn:
         }[self.kind]
 
 
+#: kind of a column with no non-empty sample cell (converter.go:214-217)
+EMPTY_SAMPLE_KIND = "int64"
+
+
 def infer_column_kinds(
-    sample: DataFrame, enhanced_dates: bool = False
-) -> dict[str, str]:
-    """One aggregation pass over an all-string sample → column kinds.
+    sample: DataFrame, group: str, enhanced_dates: bool = False
+) -> dict[str, dict[str, str]]:
+    """One aggregation pass over an all-string sample → column kinds of
+    each source.
+
+    ``group`` names the column of ``sample`` that tags each row with its
+    source (a file); the pass is ONE ``groupBy(group)`` aggregation over
+    the other columns → ``{group value: {column: kind}}``. A source with
+    no rows is absent; its columns take :data:`EMPTY_SAMPLE_KIND`.
 
     The whole vote matrix is ONE SQL ``struct(...)`` expression built
     as a string: per-column Column construction (4-6 expressions × N
@@ -103,8 +114,9 @@ def infer_column_kinds(
     def cnt(cond: str, alias: str) -> str:
         return f"count(CASE WHEN {cond} THEN 1 END) AS {alias}"
 
+    columns = [c for c in sample.columns if c != group]
     parts = []
-    for idx, name in enumerate(sample.columns):
+    for idx, name in enumerate(columns):
         raw = f"`{name}`"
         v = f"trim({raw})"
         ne = f"({raw} IS NOT NULL AND {raw} != '')"
@@ -134,34 +146,32 @@ def infer_column_kinds(
             ) + ") IS NOT NULL"
             parts.append(cnt(f"{cls} AND {date_probe}", f"c{idx}_d"))
             parts.append(cnt(f"{cls} AND {ts_probe}", f"c{idx}_t"))
-    row = (
-        sample.agg(F.expr(f"struct({', '.join(parts)})").alias("s"))
-        .collect()[0]["s"]
-    )
+    votes = F.expr(f"struct({', '.join(parts)})").alias("s")
+    return {
+        r[group]: {
+            name: _column_kind(r["s"], idx, enhanced_dates)
+            for idx, name in enumerate(columns)
+        }
+        for r in sample.groupBy(group).agg(votes).collect()
+    }
 
-    kinds: dict[str, str] = {}
-    for idx, name in enumerate(sample.columns):
-        n = row[f"c{idx}_n"]
-        b = row[f"c{idx}_b"]
-        i = row[f"c{idx}_i"]
-        fl = row[f"c{idx}_f"]
-        d = row[f"c{idx}_d"] if enhanced_dates else 0
-        t = row[f"c{idx}_t"] if enhanced_dates else 0
-        if n == 0:
-            kinds[name] = "int64"  # optimistic default, converter.go:214-217
-        elif b == n:
-            kinds[name] = "bool"
-        elif i == n:
-            kinds[name] = "int64"
-        elif fl == n:
-            kinds[name] = "float64"
-        elif enhanced_dates and d == n:
-            kinds[name] = "date"
-        elif enhanced_dates and t == n:
-            kinds[name] = "timestamp"
-        else:
-            kinds[name] = "string"  # string is ⊤; dates demote here in parity
-    return kinds
+
+def _column_kind(votes, idx: int, enhanced_dates: bool) -> str:
+    """Column ``idx``'s kind from its vote counts (the lattice join)."""
+    n = votes[f"c{idx}_n"]
+    if n == 0:
+        return EMPTY_SAMPLE_KIND  # optimistic default, converter.go:214-217
+    if votes[f"c{idx}_b"] == n:
+        return "bool"
+    if votes[f"c{idx}_i"] == n:
+        return "int64"
+    if votes[f"c{idx}_f"] == n:
+        return "float64"
+    if enhanced_dates and votes[f"c{idx}_d"] == n:
+        return "date"
+    if enhanced_dates and votes[f"c{idx}_t"] == n:
+        return "timestamp"
+    return "string"  # string is ⊤; dates demote here in parity
 
 
 def cast_column(kind: str, name: str) -> F.Column:

@@ -11,10 +11,12 @@ import os
 
 import pytest
 
+from csv_to_parquet_spark.convert import converter as conv
 from csv_to_parquet_spark.convert.converter import (
     convert_all,
     convert_file,
     infer_file_schema,
+    infer_file_schemas,
 )
 from csv_to_parquet_spark.convert.inference import format_schema
 
@@ -303,3 +305,175 @@ def test_promote_replaces_the_previous_output(tmp_path):
     _single_file_output(tmp, str(final))
     assert final.read_bytes() == b"new output 0"
     assert not os.path.exists(tmp)
+
+
+# ---------------------------------------------------------------------------
+# Grouped inference: one Spark job samples every file of a batch.
+# ---------------------------------------------------------------------------
+
+# name → (content, pinned parity schema); widths 1 to 8
+_BATCH = {
+    "typed_basic.csv": (
+        "id,amount,active,name,signup_date\n"
+        "1,19.99,true,alice,2024-01-15\n2,5,false,bob,2024-02-20\n"
+        "3,,true,,15/03/2024\n",
+        "id:INT64, amount:DOUBLE, active:BOOLEAN, name:UTF8, signup_date:UTF8",
+    ),
+    "widening.csv": (
+        "a,b,c,d,e\n1,true,1,x,1\n2.5,1,true,2,2\n3,false,false,3.5,3\n",
+        "a:DOUBLE, b:UTF8, c:UTF8, d:UTF8, e:INT64",
+    ),
+    "empty_col.csv": ("id,ghost\n1,\n2,\n", "id:INT64, ghost:INT64"),
+    "dirty_headers.csv": (
+        "\ufeff First Name , order.total,,价格\na,1,x,2\n",
+        "First_Name:UTF8, order_total:INT64, column_2:UTF8, 价格:INT64",
+    ),
+    "ragged.csv": (
+        'a,b,c\n1,2,3\n4,5\n6,7,8,9\n"unterm,10,11\n',
+        "a:UTF8, b:INT64, c:INT64",
+    ),
+    "bools.csv": (
+        "x1,x2,x3,x4,x5\nTRUE,1e3,+5,0,NaN\nfalse,2.0,-7,1,2.5\n",
+        "x1:BOOLEAN, x2:DOUBLE, x3:INT64, x4:INT64, x5:DOUBLE",
+    ),
+    "dates.csv": (
+        "d1,d2,d3,d4,d5,d6\n2024-03-15,15/03/2024,03/15/2024,"
+        "2024-03-15T10:30:00,2024-03-15 10:30:00,2024-03-15T10:30:00Z\n",
+        "d1:UTF8, d2:UTF8, d3:UTF8, d4:UTF8, d5:UTF8, d6:UTF8",
+    ),
+    "empties.csv": ('a,b\nx, \ny,"  "\nz,w\n', "a:UTF8, b:UTF8"),
+    # extra cells of a narrow file fall into columns it ignores
+    "narrow_extra.csv": ("p,q\n1,2,zzz,true\n3,4\n", "p:INT64, q:INT64"),
+    "header_only.csv": ("x,y,z\n", "x:INT64, y:INT64, z:INT64"),
+    "padded.csv": ('n,m\n"  5  ",1\n', "n:INT64, m:INT64"),
+    "dup_headers.csv": (
+        "a,a, a ,b\n1,x,2.5,\n",
+        "a:INT64, a_1:UTF8, a_2:DOUBLE, b:INT64",
+    ),
+    "one.csv": ("solo\n1\n", "solo:INT64"),
+    "wide.csv": (
+        "w1,w2,w3,w4,w5,w6,w7,w8\n1,2,3,4,5,6,7,8\nx,2,3.5,true,,6,7,\n",
+        "w1:UTF8, w2:INT64, w3:DOUBLE, w4:UTF8, w5:INT64, w6:INT64, w7:INT64, w8:INT64",
+    ),
+}
+# enhanced mode types the date columns instead of demoting them
+_BATCH_ENHANCED = {
+    "typed_basic.csv": (
+        "id:INT64, amount:DOUBLE, active:BOOLEAN, name:UTF8, signup_date:DATE"
+    ),
+    "dates.csv": (
+        "d1:DATE, d2:DATE, d3:DATE, d4:TIMESTAMP, d5:TIMESTAMP, d6:TIMESTAMP"
+    ),
+}
+
+
+@pytest.mark.parametrize("enhanced", [False, True])
+def test_grouped_inference_equals_per_file(spark, tmp_path, enhanced):
+    d = tmp_path / "batch"
+    d.mkdir()
+    paths = [_write(d, name, body) for name, (body, _) in _BATCH.items()]
+    grouped = {
+        os.path.basename(p): format_schema(cols)
+        for p, cols in infer_file_schemas(spark, paths, enhanced_dates=enhanced).items()
+    }
+    alone = {
+        os.path.basename(p): _schema_of(spark, p, enhanced_dates=enhanced)
+        for p in paths
+    }
+    assert grouped == alone
+    pinned = {n: want for n, (_, want) in _BATCH.items()}
+    if enhanced:
+        pinned.update(_BATCH_ENHANCED)
+    assert grouped == pinned
+
+
+def test_shared_sample_failure_fails_only_its_file(spark, tmp_path, monkeypatch):
+    d = tmp_path / "batch"
+    d.mkdir()
+    bad = _write(d, "bad.csv", "a,b\n1,2\n")
+    _write(d, "good1.csv", "a\n1\n")
+    _write(d, "good2.csv", "x,y,z\n1.5,t,3\n")
+    scan = conv._scan_samples
+
+    def planted(spark_, stage, staged, *a):
+        if bad in staged.values():
+            raise RuntimeError("planted sample failure")
+        return scan(spark_, stage, staged, *a)
+
+    monkeypatch.setattr(conv, "_scan_samples", planted)
+    summary = convert_all(spark, str(d), str(tmp_path / "out"))
+    by_name = {os.path.basename(r.input): r for r in summary.results}
+    assert by_name["bad.csv"].error == "planted sample failure"
+    assert by_name["good1.csv"].ok and by_name["good2.csv"].ok
+    assert summary.converted == 2 and summary.failed == 1
+    assert sorted(os.listdir(tmp_path / "out")) == ["good1.parquet", "good2.parquet"]
+
+
+def test_empty_and_bad_utf8_files_fail_alone(spark, tmp_path):
+    d = tmp_path / "batch"
+    d.mkdir()
+    _write(d, "empty.csv", b"")
+    _write(d, "bad_utf8.csv", b"a,b\xff\n1,2\n")
+    _write(d, "ok.csv", "a,b\n1,2\n")
+    summary = convert_all(spark, str(d), str(tmp_path / "out"))
+    errors = {os.path.basename(r.input): r.error for r in summary.results}
+    assert errors == {
+        "bad_utf8.csv": "'utf-8' codec can't decode byte 0xff in position 3: "
+        "invalid start byte",
+        "empty.csv": "\n[PARSE_EMPTY_STATEMENT] Syntax error, unexpected empty "
+        "statement. SQLSTATE: 42617 (line 1, pos 0)\n\n== SQL ==\n\n^^^\n",
+        "ok.csv": "",
+    }
+    assert os.listdir(tmp_path / "out") == ["ok.parquet"]
+
+
+def test_convert_all_infers_in_one_job(spark, tmp_path, monkeypatch):
+    n = 6
+    d = tmp_path / "batch"
+    d.mkdir()
+    for i in range(n):
+        cols = ",".join(f"c{j}" for j in range(i + 1))
+        _write(d, f"f{i}.csv", cols + "\n" + ",".join(["1"] * (i + 1)) + "\n")
+    sc = spark.sparkContext
+    group = f"convert-all-{os.getpid()}-{id(tmp_path)}"
+    original = conv.convert_file
+
+    def grouped(*a, **kw):  # pool threads tag their own jobs
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        return original(*a, **kw)
+
+    monkeypatch.setattr(conv, "convert_file", grouped)
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        summary = convert_all(spark, str(d), str(tmp_path / "out"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert summary.converted == n
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= n + 2, jobs  # one write each plus the shared sample
+
+
+def test_rows_from_the_written_footers(spark, tmp_path):
+    body = "k,v\n" + "".join(f"{i},{i * 2}\n" for i in range(57))
+    src = _write(tmp_path, "rows.csv", body)
+    one = convert_file(spark, src, str(tmp_path / "one"))
+    assert one.ok and one.rows == 57
+    parts = convert_file(spark, src, str(tmp_path / "parts"), single_file=False)
+    assert parts.ok and parts.rows == 57
+    assert os.path.isdir(parts.output)
+
+
+def test_unreadable_footer_fails_and_keeps_the_source(spark, tmp_path, monkeypatch):
+    def promote_garbage(tmp_dir, final_path):
+        with open(final_path, "wb") as f:
+            f.write(b"not a parquet file")
+
+    monkeypatch.setattr(conv, "_single_file_output", promote_garbage)
+    src = _write(tmp_path, "keep.csv", "a\n1\n")
+    res = convert_file(spark, src, str(tmp_path / "out"), delete_original=True)
+    assert not res.ok and "footer" in res.error
+    assert res.rows == -1
+    assert os.path.exists(src)
+    assert not os.path.exists(res.output)
+    assert not os.path.exists(res.output + "._spark_tmp")
