@@ -42,83 +42,14 @@ CANARIES = [
     "source_jdbc_roundtrip",
 ]
 
-# VERDICT r6 #1: the 34 catalog entries that have never appeared in a
-# driver CORRECTNESS sample (union of r1-r6; they all pass local
-# parity). They outrank brand-new round-7 queries within the
-# never-checked tier so the driver converts their local evidence into
-# recorded cross-engine evidence first; once green they fall out of
-# this tier automatically. (The r5 FRONTLOAD names all went green in
-# the r6 window and were dropped from this list.)
-FRONTLOAD = [
-    "orders_kaplan_meier",
-    "events_gapfill_linear",
-    "session_window_dynamic_gap",
-    "events_mutual_information",
-    "events_copresence_bucketed",
-    "stats_ks_two_sample",
-    "stats_mannwhitney_u",
-    "stats_anova_oneway",
-    "stats_corr_matrix",
-    "stats_ols_two_factor",
-    "events_lag_xcorr",
-    "stats_spearman_rank",
-    "stats_winsorized_mean",
-    "events_acf_daily",
-    "stats_huber_location",
-    "source_python_datasource",
-    "variant_events_shred",
-    "sql_udf_disc_revenue",
-    "mapinarrow_norm_audit",
-    "pipeline_observe_metrics",
-    "sketch_hll_daily_rollup",
-    "agg_listagg_nations",
-    "udtf_polymorphic_top_tokens",
-    "ps_pandas_api_rollup",
-    "recursive_doc_ancestry",
-    "recursive_yearly_compound",
-    "graph_label_propagation",
-    "feat_target_encoding_loo",
-    "mm_phash_near_dup",
-    "source_latin1_csv_scan",
-    "source_utf16_csv_scan",
-    "stream_backfill_rate_limited",
-    "stream_state_introspection",
-    "stream_session_dynamic_gap",
-    # un-gated in r7 via pbcompat (system protobuf runtime) — needs its
-    # first driver row
-    "stream_transform_with_state",
-]
-
-# VERDICT r9 #1 introduced this set to keep brand-new entries from
-# displacing the stale-drain backlog when the backlog alone filled the
-# window. EMPTY since r11: the r10 deferred names
-# (dedup_ccnet_lines, tokenizer_fertility_report,
-# dedup_cross_source_overlap) fall back to the never-checked tier,
-# which the r11 window has room for beside the 7 remaining r3-stale
-# entries. Re-populate only when a round both adds entries AND has a
-# stale backlog bigger than the window can absorb.
-DEFER_BEHIND_STALE: set[str] = set()
-
-#: Deferred names sort WITHIN the green tier strictly BETWEEN rounds
-#: ``DEFER_EFFECTIVE_ROUND - 1`` and ``DEFER_EFFECTIVE_ROUND`` — after
-#: the stale backlog being drained, ahead of every green verified at
-#: the effective round or later (the key carries a 0-vs-1 element so a
-#: green AT the effective round can never tie-break past a deferred
-#: name; r10's key tied there and left entry to module_pos — the r10
-#: review's latent-starvation finding). A separate always-last tier
-#: would STARVE them outright: all other entries are green, so the
-#: green tier refills the window forever.
-DEFER_EFFECTIVE_ROUND = 4
-
 
 def rotation_sort_key(
     name: str,
     verified: dict[str, int],
     attempted: set[str],
     module_pos: dict[str, int],
-    frontload_pos: dict[str, int],
-    oracle_stale: set[str] = frozenset(),
-) -> tuple[int, int, int, int]:
+    oracle_stale: set[str],
+) -> tuple[int, int, int]:
     """Rotation rank for one query (module-level so tests can probe the
     tie-break cases directly). Three tiers: (0) previously-checked but
     never green — a fix awaiting re-verification, the most urgent rows
@@ -126,20 +57,14 @@ def rotation_sort_key(
     DuckDB oracle AFTER its last driver-green row, so the driver has
     only ever rows-only-checked it; its oracle form is unverified and
     must re-enter the window) ranked just behind true red rows;
-    (1) never checked at all (FRONTLOAD names first), except
-    DEFER_BEHIND_STALE names, which slot into the green tier strictly
-    between rounds DEFER_EFFECTIVE_ROUND-1 and DEFER_EFFECTIVE_ROUND;
-    (2) green, least-recently-verified first. Module order breaks
-    remaining ties so the order is deterministic."""
+    (1) never checked at all; (2) green, least-recently-verified
+    first. Module order breaks remaining ties so the order is
+    deterministic."""
     if name in oracle_stale:
-        return (0, 1, 0, module_pos[name])
+        return (0, 1, module_pos[name])
     if name not in verified:
-        if name in attempted:
-            return (0, 0, 0, module_pos[name])
-        if name in DEFER_BEHIND_STALE:
-            return (2, DEFER_EFFECTIVE_ROUND, 0, module_pos[name])
-        return (1, 0 if name in frontload_pos else 1, 0, module_pos[name])
-    return (2, verified[name], 1, module_pos[name])
+        return (0 if name in attempted else 1, 0, module_pos[name])
+    return (2, verified[name], module_pos[name])
 
 
 def _row_is_green(row: dict) -> bool:
@@ -273,8 +198,6 @@ def build_catalog() -> Catalog:
     attempted = load_attempted()
     module_pos = {name: i for i, name in enumerate(merged.queries)}
 
-    frontload_pos = {name: i for i, name in enumerate(FRONTLOAD)}
-
     # VERDICT r11 #1: an entry whose oracle was added AFTER its last
     # driver-green (rows-only) row is stale — the oracle form has never
     # been driver-compared. Self-maintaining for any future conversion.
@@ -283,7 +206,7 @@ def build_catalog() -> Catalog:
     rotation = sorted(
         (n for n in merged.queries if n not in CANARIES),
         key=lambda n: rotation_sort_key(
-            n, verified, attempted, module_pos, frontload_pos, oracle_stale
+            n, verified, attempted, module_pos, oracle_stale
         ),
     )
 

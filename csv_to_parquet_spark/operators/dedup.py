@@ -1195,12 +1195,17 @@ def dedup_simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
         # doc — the per-doc loop was overhead-bound at ~2× the math),
         # and per-doc vote sums come from one `np.add.reduceat` over
         # the doc offsets. Chunking bounds the unpacked matrix to
-        # ~20 MB regardless of Arrow batch size.
+        # ~20 MB regardless of Arrow batch size. A NULL text hashes to
+        # a NULL array and folds to NULL, as the JVM transform path does.
         out = np.zeros(len(hs_col), dtype=np.int64)
+        null = hs_col.isna().to_numpy()
         chunk_sz = 256
         for s in range(0, len(hs_col), chunk_sz):
             chunk = hs_col.iloc[s : s + chunk_sz]
-            arrs = [np.asarray(h, dtype=np.int64) for h in chunk]
+            arrs = [
+                np.asarray(() if h is None else h, dtype=np.int64)
+                for h in chunk
+            ]
             lens = np.fromiter(
                 (len(a) for a in arrs), dtype=np.int64, count=len(arrs)
             )
@@ -1214,7 +1219,7 @@ def dedup_simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
             sim = (2 * sums - lens[nz][:, None]) > 0
             vals = (sim.astype(np.int64) << bit_idx).sum(axis=1)
             out[np.nonzero(nz)[0] + s] = vals
-        return pd.Series(out)
+        return pd.Series(pd.arrays.IntegerArray(out, null))
 
     return hashed.select("doc_id", fold_bits("hs").alias("simhash"))
 
@@ -2529,9 +2534,7 @@ _SRC_EFF_CTES = f"""occ AS (
     FROM eff, s
     """,
 )
-def mix_source_weights(
-    spark: SparkSession, sf_dir: str, eff: DataFrame | None = None
-) -> DataFrame:
+def mix_source_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mixing-weight DECISION operator over the cross-source overlap
     matrix (VERDICT r10 #5 — the consumer that turns the r10
     diagnostic into an action): down-weight each source by the
@@ -2567,26 +2570,10 @@ def mix_source_weights(
     there applies at thousands of dumps.
     Reference: no counterpart (converter.go is a per-file converter);
     SURVEY §2 LLM-dedup extension."""
-    if eff is None:
-        eff = _source_effective_frame(spark, sf_dir)
-    te = eff.agg(
-        F.sum("effective_passages").cast("bigint").alias("te")
-    )
-    return eff.join(F.broadcast(te)).select(
-        "source",
-        "n_passages",
-        "ceded_passages",
-        "effective_passages",
-        F.expr(
-            "cast(cast(effective_passages as decimal(38,0)) * 1000000"
-            " div te as bigint)"
-        ).alias("weight_micro"),
-    )
+    return mix_pipeline(spark, sf_dir)["weights"]
 
 
-def _source_effective_frame(
-    spark: SparkSession, sf_dir: str, base: DataFrame | None = None
-) -> DataFrame:
+def _source_effective_frame(base: DataFrame) -> DataFrame:
     """(source, n_passages, ceded_passages, effective_passages) —
     the down-weighting core shared by :func:`mix_source_weights`
     (normalized weights) and :func:`mix_token_allocation` (budget
@@ -2594,10 +2581,7 @@ def _source_effective_frame(
     shared :func:`_mix_base` proxy (r12: was a DISTINCT + fp-keyed
     self-join — three corpus-scale exchanges and a second corpus
     tokenize); everything downstream is |sources|- or
-    |sources|²-sized. ``base`` lets callers thread one shared
-    tokenized proxy across the chain's cores."""
-    if base is None:
-        base = _mix_base(spark, sf_dir)
+    |sources|²-sized. ``base`` is the chain's one tokenized proxy."""
     bysrc = _fp_sources(base)
     tot = _fp_source_totals(bysrc)
     pairs = _fp_source_pairs(bysrc)
@@ -2689,13 +2673,7 @@ _MIX_ALLOC_CTES = f"""{_SRC_EFF_CTES},
     FROM alloc a JOIN avail av USING (source)
     """,
 )
-def mix_token_allocation(
-    spark: SparkSession,
-    sf_dir: str,
-    eff: DataFrame | None = None,
-    alloc: DataFrame | None = None,
-    cum: DataFrame | None = None,
-) -> DataFrame:
+def mix_token_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-budget apportionment over the down-weighted mixture — the
     step after :func:`mix_source_weights` in a training-data plan:
     given a global token budget, how many tokens does each source
@@ -2723,54 +2701,21 @@ def mix_token_allocation(
     Plan (r12: one shared scan): ONE corpus-scale groupBy(fp)
     exchange (the effective-mass core, off the shared
     :func:`_mix_base` proxy) plus one source-keyed token-count
-    aggregation (map-side combined, off the SAME cached proxy — the
-    second corpus scan+tokenize this entry used to pay is gone). The
-    apportionment itself (1-row total broadcasts, a |sources|-row
-    remainder window) is model-sized. Reference: no counterpart
-    (converter.go is a per-file converter); SURVEY §2 LLM-dedup
-    extension."""
-    if cum is not None:
-        # pipeline path: the shared cum frame already carries per-doc
-        # token counts — no second corpus tokenize
-        avail = cum.groupBy("source").agg(
-            F.sum("n_tokens").cast("bigint").alias("avail_tokens")
-        )
-        if alloc is None:
-            alloc = _mix_alloc_frame(spark, sf_dir, eff=eff)
-    else:
-        base = _mix_base(spark, sf_dir)
-        avail = base.groupBy("source").agg(
-            F.sum("n_tokens").cast("bigint").alias("avail_tokens")
-        )
-        if alloc is None:
-            alloc = _mix_alloc_frame(spark, sf_dir, eff=eff, base=base)
-    return alloc.join(F.broadcast(avail), "source").select(
-        "source",
-        "effective_passages",
-        "avail_tokens",
-        "alloc_tokens",
-        F.expr(
-            "cast((cast(alloc_tokens as decimal(38,0)) * 1000"
-            " + avail_tokens - 1) div avail_tokens as bigint)"
-        ).alias("repeats_milli"),
-    )
+    aggregation over the persisted prefix-sum frame, which already
+    carries per-document token counts (no second corpus
+    scan+tokenize). The apportionment itself (1-row total broadcasts,
+    a |sources|-row remainder window) is model-sized. Reference: no
+    counterpart (converter.go is a per-file converter); SURVEY §2
+    LLM-dedup extension."""
+    return mix_pipeline(spark, sf_dir)["allocation"]
 
 
-def _mix_alloc_frame(
-    spark: SparkSession,
-    sf_dir: str,
-    eff: DataFrame | None = None,
-    base: DataFrame | None = None,
-) -> DataFrame:
+def _mix_alloc_frame(eff: DataFrame) -> DataFrame:
     """(source, effective_passages, alloc_tokens) — the Hamilton
-    apportionment core shared by :func:`mix_token_allocation` and
-    :func:`mix_select_documents` (the Spark twin of the
-    ``_MIX_ALLOC_CTES`` oracle constant). ``eff`` lets
-    :func:`mix_pipeline` thread one shared effective-mass frame
-    instead of recomputing the fingerprint core; ``base`` threads the
-    shared tokenized proxy one level further down."""
-    if eff is None:
-        eff = _source_effective_frame(spark, sf_dir, base=base)
+    apportionment core over the effective-mass frame ``eff``, shared
+    by the allocation, selection and instance-stream outputs of
+    :func:`mix_pipeline` (the Spark twin of the ``_MIX_ALLOC_CTES``
+    oracle constant)."""
     te = eff.agg(F.sum("effective_passages").cast("bigint").alias("te"))
     base = eff.join(F.broadcast(te)).select(
         "source",
@@ -2832,12 +2777,7 @@ _SEL_BUCKET = 128
     FROM cum c JOIN alloc a USING (source)
     """,
 )
-def mix_select_documents(
-    spark: SparkSession,
-    sf_dir: str,
-    alloc: DataFrame | None = None,
-    cum: DataFrame | None = None,
-) -> DataFrame:
+def mix_select_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Materialize the mixture — the final step of the weights →
     budget → SELECTION chain: per source, documents are taken in
     deterministic priority order (doc_id here; production substitutes
@@ -2866,38 +2806,18 @@ def mix_select_documents(
     window: a source with 10¹¹ documents never funnels through one
     task. Reference: no counterpart (converter.go is a per-file
     converter); SURVEY §2 LLM-dedup extension."""
-    if alloc is None or cum is None:
-        base = _mix_base(spark, sf_dir)
-        if alloc is None:
-            alloc = _mix_alloc_frame(spark, sf_dir, base=base)
-        if cum is None:
-            cum = _mix_cum_frame(spark, sf_dir, base=base)
-    alloc = alloc.select("source", "alloc_tokens")
-    return cum.join(F.broadcast(alloc), "source").select(
-        "doc_id",
-        "source",
-        "n_tokens",
-        "cum_before_tokens",
-        (F.col("cum_before_tokens") < F.col("alloc_tokens")).alias(
-            "selected"
-        ),
-    )
+    return mix_pipeline(spark, sf_dir)["selection"]
 
 
-def _mix_cum_frame(
-    spark: SparkSession, sf_dir: str, base: DataFrame | None = None
-) -> DataFrame:
+def _mix_cum_frame(base: DataFrame) -> DataFrame:
     """(doc_id, source, n_tokens, cum_before_tokens) — the per-source
     token prefix sum in doc_id order, via the pack_token_budget
     two-phase scaffold (within-(source, bucket) windows run parallel;
     the per-(source, bucket) offset frame is corpus/_SEL_BUCKET rows).
-    Shared by :func:`mix_select_documents` and the round-12 epoched
-    consumers (:func:`mix_pack_sequences`, :func:`mix_training_order`).
-    ``base`` threads the shared :func:`_mix_base` proxy (r12); the
-    frame read twice below (within + offsets) is that persisted cache
-    either way."""
-    if base is None:
-        base = _mix_base(spark, sf_dir)
+    Shared by the selection, available-token and instance-stream
+    steps of :func:`mix_pipeline`. ``base`` is the persisted
+    :func:`_mix_base` proxy, so the frame read twice below (within +
+    offsets) is one cache."""
     toks = base.select(
         "doc_id",
         "source",
@@ -2977,12 +2897,7 @@ _MIX_INST_CTES = f"""{_MIX_ALLOC_CTES},
       WHERE c.cum_before_tokens < a.alloc_tokens)"""
 
 
-def _mix_instances_frame(
-    spark: SparkSession,
-    sf_dir: str,
-    alloc: DataFrame | None = None,
-    cum: DataFrame | None = None,
-) -> DataFrame:
+def _mix_instances_frame(alloc: DataFrame, cum: DataFrame) -> DataFrame:
     """(source, doc_id, n_tokens, epoch) — the Spark twin of the
     ``_MIX_INST_CTES`` oracle constant (see its docstring for the
     instance rule). The repeat count per document is closed-form,
@@ -2991,12 +2906,6 @@ def _mix_instances_frame(
     shuffle beyond the cum/alloc cores it builds on. avail_tokens is
     derived from the cum frame itself (its persisted per-doc token
     counts), not a second corpus scan+tokenize (r12 review)."""
-    if alloc is None or cum is None:
-        base = _mix_base(spark, sf_dir)
-        if alloc is None:
-            alloc = _mix_alloc_frame(spark, sf_dir, base=base)
-        if cum is None:
-            cum = _mix_cum_frame(spark, sf_dir, base=base)
     alloc = alloc.select("source", "alloc_tokens")
     avail = cum.groupBy("source").agg(
         F.sum("n_tokens").cast("bigint").alias("avail_tokens")
@@ -3046,9 +2955,7 @@ _PACK_BIN = 2048
     FROM g GROUP BY 1
     """,
 )
-def mix_pack_sequences(
-    spark: SparkSession, sf_dir: str, inst: DataFrame | None = None
-) -> DataFrame:
+def mix_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pack the SELECTED MIXTURE into contiguous {_PACK_BIN}-token
     training bins — the composite that closes the weights → budget →
     selection → PACKING chain (VERDICT r11 #2): the epoched instance
@@ -3079,48 +2986,7 @@ def mix_pack_sequences(
     ~10⁶-row — single-task-window + broadcast safe); no corpus-wide
     single-partition window. Reference: no counterpart (converter.go
     is a per-file converter); SURVEY §2 LLM-dedup extension."""
-    if inst is None:
-        inst = _persist(
-            _mix_instances_frame(spark, sf_dir).withColumn(
-                "bucket", F.expr(f"doc_id div {_SEL_BUCKET}")
-            )
-        )
-    else:
-        # pipeline path: inst is already persisted upstream; the
-        # bucket column is a narrow map over the cached rows
-        inst = inst.withColumn("bucket", F.expr(f"doc_id div {_SEL_BUCKET}"))
-    w_in = (
-        Window.partitionBy("source", "epoch", "bucket")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    within = inst.withColumn("cum_in", F.sum("n_tokens").over(w_in))
-    w_off = Window.orderBy("source", "epoch", "bucket").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = (
-        inst.groupBy("source", "epoch", "bucket")
-        .agg(F.sum("n_tokens").alias("bucket_sum"))
-        .withColumn(
-            "offset", F.coalesce(F.sum("bucket_sum").over(w_off), F.lit(0))
-        )
-        .select("source", "epoch", "bucket", "offset")
-    )
-    cum = within.join(
-        F.broadcast(offsets), ["source", "epoch", "bucket"]
-    ).withColumn("cum_tokens", F.col("cum_in") + F.col("offset"))
-    return (
-        cum.withColumn(
-            "bin_id",
-            F.expr(f"(cum_tokens - 1) div {_PACK_BIN}").cast("bigint"),
-        )
-        .groupBy("bin_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_tokens").cast("bigint").alias("sum_tokens"),
-            F.countDistinct("source").cast("bigint").alias("n_sources"),
-        )
-    )
+    return mix_pipeline(spark, sf_dir)["sequences"]
 
 
 #: Seed for the reproducible training-order shuffle — a run parameter
@@ -3147,9 +3013,7 @@ _ORDER_SEED = "spark-graft-r12"
     FROM k
     """,
 )
-def mix_training_order(
-    spark: SparkSession, sf_dir: str, inst: DataFrame | None = None
-) -> DataFrame:
+def mix_training_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic training-order curriculum over the selected
     mixture (VERDICT r11 #4 — the step between selection and packing
     in published pipelines): every document instance of the epoched
@@ -3175,8 +3039,118 @@ def mix_training_order(
     order makes the FINAL rank exact. Reference: no counterpart
     (converter.go is a per-file converter); SURVEY §2 LLM-dedup
     extension."""
-    if inst is None:
-        inst = _mix_instances_frame(spark, sf_dir)
+    return mix_pipeline(spark, sf_dir)["order"]
+
+
+def mix_pipeline(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
+    """The mixing chain — the ONE code path behind all five ``mix_*``
+    catalog entries, each of which returns its own key of this dict:
+    ``{"weights", "allocation", "selection", "sequences", "order"}``.
+
+    The corpus-scale cores are built once here and persisted (tracked):
+      - the corpus-scale DISTINCT (fp, source) fingerprint exchange
+        (``_source_effective_frame`` — feeds weights + allocation +
+        selection + both epoched consumers through ``alloc``),
+      - the tokenize + two-phase prefix-sum scaffold
+        (``_mix_cum_frame`` — feeds selection, avail-tokens, and the
+        instance stream),
+      - the epoched instance explosion (``_mix_instances_frame`` —
+        feeds packing and training order).
+
+    Plans and ``persist`` are lazy, so collecting one output runs only
+    that output's subgraph (an entry pays no job for its siblings),
+    and collecting several reuses the cores (pinned by
+    tests/test_round12.py, along with each core being built once and
+    per-entry job ceilings). Persisted intermediates are registered
+    with the tracked cache; call ``operators.cache.release_caches``
+    when done, as bench does.
+
+    Scale: the persisted cores are the tokenized base proxy, the
+    per-fp source sets, the |sources|-sized mass/allocation frames,
+    the per-document prefix sums and the |selected|·epochs instance
+    stream, which production would land to disk between stages
+    anyway. Reference: no counterpart (converter.go is a per-file
+    converter); SURVEY §2 LLM-dedup extension."""
+    base = _mix_base(spark, sf_dir)
+    eff = _persist(_source_effective_frame(base))
+    alloc = _persist(_mix_alloc_frame(eff))
+    cum = _persist(_mix_cum_frame(base))
+    inst = _persist(_mix_instances_frame(alloc, cum))
+
+    te = eff.agg(F.sum("effective_passages").cast("bigint").alias("te"))
+    weights = eff.join(F.broadcast(te)).select(
+        "source",
+        "n_passages",
+        "ceded_passages",
+        "effective_passages",
+        F.expr(
+            "cast(cast(effective_passages as decimal(38,0)) * 1000000"
+            " div te as bigint)"
+        ).alias("weight_micro"),
+    )
+
+    # the cum frame already carries per-doc token counts
+    avail = cum.groupBy("source").agg(
+        F.sum("n_tokens").cast("bigint").alias("avail_tokens")
+    )
+    allocation = alloc.join(F.broadcast(avail), "source").select(
+        "source",
+        "effective_passages",
+        "avail_tokens",
+        "alloc_tokens",
+        F.expr(
+            "cast((cast(alloc_tokens as decimal(38,0)) * 1000"
+            " + avail_tokens - 1) div avail_tokens as bigint)"
+        ).alias("repeats_milli"),
+    )
+
+    selection = cum.join(
+        F.broadcast(alloc.select("source", "alloc_tokens")), "source"
+    ).select(
+        "doc_id",
+        "source",
+        "n_tokens",
+        "cum_before_tokens",
+        (F.col("cum_before_tokens") < F.col("alloc_tokens")).alias(
+            "selected"
+        ),
+    )
+
+    # sequences: global two-phase prefix sum over (source, epoch,
+    # doc-bucket); the bucket column is a narrow map over cached rows
+    bucketed = inst.withColumn("bucket", F.expr(f"doc_id div {_SEL_BUCKET}"))
+    w_in = (
+        Window.partitionBy("source", "epoch", "bucket")
+        .orderBy("doc_id")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    within = bucketed.withColumn("cum_in", F.sum("n_tokens").over(w_in))
+    w_off = Window.orderBy("source", "epoch", "bucket").rowsBetween(
+        Window.unboundedPreceding, -1
+    )
+    offsets = (
+        bucketed.groupBy("source", "epoch", "bucket")
+        .agg(F.sum("n_tokens").alias("bucket_sum"))
+        .withColumn(
+            "offset", F.coalesce(F.sum("bucket_sum").over(w_off), F.lit(0))
+        )
+        .select("source", "epoch", "bucket", "offset")
+    )
+    sequences = (
+        within.join(F.broadcast(offsets), ["source", "epoch", "bucket"])
+        .withColumn(
+            "bin_id",
+            F.expr(f"(cum_in + offset - 1) div {_PACK_BIN}").cast("bigint"),
+        )
+        .groupBy("bin_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("n_tokens").cast("bigint").alias("sum_tokens"),
+            F.countDistinct("source").cast("bigint").alias("n_sources"),
+        )
+    )
+
+    # order: the distributed zipWithIndex scaffold over the full key
     k = inst.select(
         "source",
         "doc_id",
@@ -3192,19 +3166,19 @@ def mix_training_order(
             32, "epoch", "shuffle_key", "source", "doc_id"
         ).withColumn("pid", F.spark_partition_id())
     )
-    w_in = Window.partitionBy("pid").orderBy(
+    w_rank = Window.partitionBy("pid").orderBy(
         "epoch", "shuffle_key", "source", "doc_id"
     )
-    w_off = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = (
+    w_pid = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
+    pid_offsets = (
         r.groupBy("pid")
         .agg(F.count(F.lit(1)).alias("c"))
-        .withColumn("off", F.coalesce(F.sum("c").over(w_off), F.lit(0)))
+        .withColumn("off", F.coalesce(F.sum("c").over(w_pid), F.lit(0)))
         .select("pid", "off")
     )
-    return (
-        r.withColumn("rn", F.row_number().over(w_in))
-        .join(F.broadcast(offsets), "pid")
+    order = (
+        r.withColumn("rn", F.row_number().over(w_rank))
+        .join(F.broadcast(pid_offsets), "pid")
         .select(
             "source",
             "doc_id",
@@ -3213,52 +3187,10 @@ def mix_training_order(
             (F.col("rn") + F.col("off")).cast("bigint").alias("train_order"),
         )
     )
-
-
-def mix_pipeline(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """The AMORTIZED mixing chain — all five ``mix_*`` entry outputs
-    from one pass over shared persisted cores, the way a production
-    run would execute the pipeline (each catalog entry deliberately
-    stays standalone for per-entry driver independence; this is the
-    compute-the-chain-once path those entries' docstrings promise).
-
-    Shared exactly once here (vs once PER ENTRY standalone):
-      - the corpus-scale DISTINCT (fp, source) fingerprint exchange
-        (``_source_effective_frame`` — feeds weights + allocation +
-        selection + both epoched consumers through ``alloc``),
-      - the tokenize + two-phase prefix-sum scaffold
-        (``_mix_cum_frame`` — feeds selection, avail-tokens, and the
-        instance stream),
-      - the epoched instance explosion (``_mix_instances_frame`` —
-        feeds packing and training order).
-
-    Returns ``{"weights", "allocation", "selection", "sequences",
-    "order"}`` — each DataFrame is row-identical to its standalone
-    catalog entry (pinned by tests/test_round12.py, which also pins
-    that each core function is invoked exactly once). Persisted
-    intermediates are registered with the tracked cache; call
-    ``operators.cache.release_caches`` when done, as bench does.
-
-    Scale: identical per-stage plans to the audited standalone
-    entries — sharing removes repeated corpus scans/exchanges without
-    adding any new shuffle; the persisted cores are the frames the
-    entries already persist (the tokenized base proxy, the per-fp
-    source sets) plus the |selected|·epochs
-    instance stream, which production would land to disk between
-    stages anyway. Reference: no counterpart (converter.go is a
-    per-file converter); SURVEY §2 LLM-dedup extension (non-entry
-    composition API)."""
-    base = _mix_base(spark, sf_dir)
-    eff = _persist(_source_effective_frame(spark, sf_dir, base=base))
-    alloc = _persist(_mix_alloc_frame(spark, sf_dir, eff=eff))
-    cum = _persist(_mix_cum_frame(spark, sf_dir, base=base))
-    inst = _persist(_mix_instances_frame(spark, sf_dir, alloc=alloc, cum=cum))
     return {
-        "weights": mix_source_weights(spark, sf_dir, eff=eff),
-        "allocation": mix_token_allocation(
-            spark, sf_dir, alloc=alloc, cum=cum
-        ),
-        "selection": mix_select_documents(spark, sf_dir, alloc=alloc, cum=cum),
-        "sequences": mix_pack_sequences(spark, sf_dir, inst=inst),
-        "order": mix_training_order(spark, sf_dir, inst=inst),
+        "weights": weights,
+        "allocation": allocation,
+        "selection": selection,
+        "sequences": sequences,
+        "order": order,
     }

@@ -4759,12 +4759,7 @@ def _ulm_oracle() -> str:
 
 
 @CAT.query("tokenizer_unigram_lm", oracle=_ulm_oracle())
-def tokenizer_unigram_lm(
-    spark: SparkSession,
-    sf_dir: str,
-    model: list[tuple] | None = None,
-    words: DataFrame | None = None,
-) -> DataFrame:
+def tokenizer_unigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unigram-LM tokenizer TRAINING (Kudo 2018; the SentencePiece
     model family) — the other production tokenizer beside the BPE
     triptych (VERDICT r11 #5): seed a candidate vocabulary (all
@@ -4797,15 +4792,7 @@ def tokenizer_unigram_lm(
     the corpus fertility in tests/test_round12.py.
     Reference: no counterpart (converter.go is a per-file converter);
     SURVEY §2 LLM-text extension."""
-    if model is None:
-        if words is None:
-            words = _ulm_words(spark, sf_dir)
-        model = unigram_lm_model(words, use_kernel=_ulm_use_kernel(sf_dir))
-    return spark.createDataFrame(
-        model,
-        "piece STRING, piece_len BIGINT, viterbi_count BIGINT,"
-        " cost_micro BIGINT, kept BOOLEAN",
-    )
+    return unigram_pipeline(spark, sf_dir)["model"]
 
 
 def _ulm_fertility_oracle() -> str:
@@ -4850,12 +4837,7 @@ def _ulm_fertility_oracle() -> str:
 
 
 @CAT.query("tokenizer_unigram_fertility", oracle=_ulm_fertility_oracle())
-def tokenizer_unigram_fertility(
-    spark: SparkSession,
-    sf_dir: str,
-    model: list[tuple] | None = None,
-    words: DataFrame | None = None,
-) -> DataFrame:
+def tokenizer_unigram_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language fertility report of the SHIPPED unigram-LM vocab —
     the apply side of :func:`tokenizer_unigram_lm` (and the unigram
     twin of ``tokenizer_fertility_report``, which reports the BPE
@@ -4866,9 +4848,11 @@ def tokenizer_unigram_fertility(
     and chars per piece for every language.
 
     Scale: the corpus is touched twice (trainer histogram + lang-keyed
-    histogram, both map-side-combined groupBys); segmentation runs
-    once per word TYPE (the codegen fold), and the (lang, word) join
-    is word-type-sized on both sides — no broadcast assumption, the
+    histogram, both map-side-combined groupBys); the trained model and
+    the histogram the trainer persisted are reused from
+    :func:`unigram_pipeline`, so segmentation runs once per word TYPE
+    (the codegen fold) off that cache, and the (lang, word) join is
+    word-type-sized on both sides — no broadcast assumption, the
     optimizer picks the join strategy. Words longer than
     {_ULM_MAXLEN} chars are outside the trainer's universe and are
     excluded from the report (documented trainer discipline).
@@ -4879,11 +4863,29 @@ def tokenizer_unigram_fertility(
     via one CTE constant, zero drift).
     Reference: no counterpart (converter.go is a per-file converter);
     SURVEY §2 LLM-text extension."""
+    return unigram_pipeline(spark, sf_dir)["fertility"]
+
+
+def unigram_pipeline(
+    spark: SparkSession, sf_dir: str
+) -> dict[str, DataFrame]:
+    """The unigram-LM chain — the ONE code path behind both catalog
+    entries, each of which returns its own key of
+    ``{"model", "fertility"}``.
+
+    The Viterbi-EM trainer runs once per call (its per-round collects
+    are eager, so the model is a driver-side list by the time this
+    returns); the word-type histogram is built once and persisted by
+    the trainer, which is the documented contract of
+    :func:`unigram_lm_model`, so the fertility report segments word
+    types off that cache. The fertility frame itself is lazy: selecting
+    ``"model"`` pays no fertility job. Call
+    ``operators.cache.release_caches`` when done, as bench does.
+    Reference: no counterpart (converter.go is a per-file converter);
+    SURVEY §2 LLM-text extension (the mix_pipeline convention)."""
     use_kernel = _ulm_use_kernel(sf_dir)
-    if words is None:
-        words = _ulm_words(spark, sf_dir)
-    if model is None:
-        model = unigram_lm_model(words, use_kernel=use_kernel)
+    words = _ulm_words(spark, sf_dir)
+    model = unigram_lm_model(words, use_kernel=use_kernel)
     kept_cost = {p: cost for p, _, _, cost, kept in model if kept}
     segn = words.select(
         "w",
@@ -4902,7 +4904,7 @@ def tokenizer_unigram_fertility(
         .groupBy("lang", "w")
         .agg(F.count(F.lit(1)).cast("bigint").alias("f"))
     )
-    agg = (
+    fertility = (
         lw.join(segn, "w")
         .groupBy("lang")
         .agg(
@@ -4914,48 +4916,28 @@ def tokenizer_unigram_fertility(
             .cast("bigint")
             .alias("n_chars"),
         )
+        .select(
+            "lang",
+            "n_words",
+            "n_pieces",
+            "n_chars",
+            F.expr(
+                "cast(cast(n_pieces as decimal(38,0)) * 1000 div n_words"
+                " as bigint)"
+            ).alias("fertility_milli"),
+            F.expr(
+                "cast(cast(n_chars as decimal(38,0)) * 1000 div n_pieces"
+                " as bigint)"
+            ).alias("chars_per_piece_milli"),
+        )
     )
-    return agg.select(
-        "lang",
-        "n_words",
-        "n_pieces",
-        "n_chars",
-        F.expr(
-            "cast(cast(n_pieces as decimal(38,0)) * 1000 div n_words"
-            " as bigint)"
-        ).alias("fertility_milli"),
-        F.expr(
-            "cast(cast(n_chars as decimal(38,0)) * 1000 div n_pieces"
-            " as bigint)"
-        ).alias("chars_per_piece_milli"),
-    )
-
-
-def unigram_pipeline(
-    spark: SparkSession, sf_dir: str
-) -> dict[str, DataFrame]:
-    """Amortized unigram-LM chain — the train-once path the two
-    catalog entries promise (each stays standalone for per-entry
-    driver independence, so standalone the Viterbi-EM trainer runs
-    TWICE across them and the word-type histogram three times).
-
-    Here the histogram is built and persisted once (the trainer's own
-    internal persist then materializes from this cache, so the corpus
-    is tokenized once for training) and the trained model is threaded
-    to both consumers via their optional ``model``/``words``
-    parameters. Returns ``{"model", "fertility"}`` — row-identical to
-    the standalone entries (test-pinned, along with
-    trainer-runs-once). Call ``operators.cache.release_caches`` when
-    done, as bench does. Reference: no counterpart (converter.go is a
-    per-file converter); SURVEY §2 LLM-text extension (non-entry
-    composition API, the mix_pipeline convention)."""
-    words = _persist(_ulm_words(spark, sf_dir))
-    model = unigram_lm_model(words, use_kernel=_ulm_use_kernel(sf_dir))
     return {
-        "model": tokenizer_unigram_lm(spark, sf_dir, model=model),
-        "fertility": tokenizer_unigram_fertility(
-            spark, sf_dir, model=model, words=words
+        "model": spark.createDataFrame(
+            model,
+            "piece STRING, piece_len BIGINT, viterbi_count BIGINT,"
+            " cost_micro BIGINT, kept BOOLEAN",
         ),
+        "fertility": fertility,
     }
 
 

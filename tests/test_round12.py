@@ -9,11 +9,15 @@
 - bench.py writes the committed BENCH_LOCAL.json artifact only at the
   canonical sf0.1; other scales go to a suffixed sidecar
   (VERDICT r11 #3).
+- the mixing and unigram chains have one code path: every entry takes
+  only (spark, sf_dir) and selects its output from the pipeline.
 """
 
 from __future__ import annotations
 
 import os
+
+import pytest
 
 
 def test_oracle_stale_entries_reenter_window():
@@ -43,14 +47,14 @@ def test_oracle_stale_entries_reenter_window():
 def test_oracle_stale_sort_key_tier():
     """The oracle-stale class sits in tier 0 (urgent) just behind true
     red rows and ahead of never-checked entries, regardless of module
-    position or FRONTLOAD membership."""
+    position."""
     from csv_to_parquet_spark import catalog
 
     module_pos = {"red_q": 9, "stale_q": 8, "new_q": 0, "green_q": 1}
     verified = {"stale_q": 7, "green_q": 3}
     attempted = {"red_q", "stale_q", "green_q"}
     key = lambda n: catalog.rotation_sort_key(  # noqa: E731
-        n, verified, attempted, module_pos, {"new_q": 0}, {"stale_q"}
+        n, verified, attempted, module_pos, {"stale_q"}
     )
     assert key("red_q") < key("stale_q")
     assert key("stale_q") < key("new_q")
@@ -102,17 +106,31 @@ def test_mix_pack_mass_matches_allocation(spark, sf_smoke):
     (VERDICT r11 #2): packed token mass per source equals the Hamilton
     allocation up to one boundary document per epoch, and the bins
     conserve the instance stream's mass exactly."""
+    from csv_to_parquet_spark.operators.cache import (
+        release_caches,
+        scope_token,
+    )
     from csv_to_parquet_spark.operators.dedup import (
         _mix_alloc_frame,
+        _mix_base,
+        _mix_cum_frame,
         _mix_instances_frame,
+        _source_effective_frame,
         mix_pack_sequences,
     )
 
-    alloc = {
-        r.source: r.alloc_tokens
-        for r in _mix_alloc_frame(spark, sf_smoke).collect()
-    }
-    inst = _mix_instances_frame(spark, sf_smoke).collect()
+    tok = scope_token()
+    try:
+        base = _mix_base(spark, sf_smoke)
+        alloc_df = _mix_alloc_frame(_source_effective_frame(base))
+        alloc = {r.source: r.alloc_tokens for r in alloc_df.collect()}
+        inst = _mix_instances_frame(alloc_df, _mix_cum_frame(base)).collect()
+        bins = sorted(
+            mix_pack_sequences(spark, sf_smoke).collect(),
+            key=lambda r: r.bin_id,
+        )
+    finally:
+        release_caches(tok)
     mass: dict = {}
     max_tok: dict = {}
     n_epochs: dict = {}
@@ -130,10 +148,6 @@ def test_mix_pack_mass_matches_allocation(spark, sf_smoke):
             a,
             mass[src],
         )
-    bins = sorted(
-        mix_pack_sequences(spark, sf_smoke).collect(),
-        key=lambda r: r.bin_id,
-    )
     total = sum(mass.values())
     ids = [b.bin_id for b in bins]
     # bin ids are unique, nonnegative, and the last bin holds the
@@ -539,38 +553,6 @@ print("SUM", sum(r.y for r in df.collect()))
     assert "SUM 135" in out.stdout, out.stderr[-2000:]
 
 
-def test_mix_pipeline_matches_standalone_entries(spark, sf_smoke):
-    """The amortized mix_pipeline must be row-identical to the five
-    standalone catalog entries on every output — sharing the cores
-    may change the physical plan, never the result. (The `order` leg
-    is deterministic because the (epoch, shuffle_key, source, doc_id)
-    sort key is unique — same reason the entry itself is replayable.)"""
-    from csv_to_parquet_spark.operators import dedup as d
-    from csv_to_parquet_spark.operators.cache import (
-        release_caches,
-        scope_token,
-    )
-
-    tok = scope_token()
-    try:
-        out = d.mix_pipeline(spark, sf_smoke)
-        standalone = {
-            "weights": d.mix_source_weights,
-            "allocation": d.mix_token_allocation,
-            "selection": d.mix_select_documents,
-            "sequences": d.mix_pack_sequences,
-            "order": d.mix_training_order,
-        }
-        assert set(out) == set(standalone)
-        for name, fn in standalone.items():
-            got = sorted(map(tuple, out[name].collect()))
-            want = sorted(map(tuple, fn(spark, sf_smoke).collect()))
-            assert got == want, f"mix_pipeline[{name}] diverges"
-            assert got, f"mix_pipeline[{name}] empty at smoke sf"
-    finally:
-        release_caches(tok)
-
-
 def test_mix_pipeline_computes_each_core_once(spark, sf_smoke, monkeypatch):
     """The point of the pipeline: the corpus-scale cores run ONCE for
     all five outputs (standalone, the fingerprint DISTINCT alone runs
@@ -611,12 +593,9 @@ def test_mix_pipeline_computes_each_core_once(spark, sf_smoke, monkeypatch):
     assert calls == {"eff": 1, "cum": 1, "inst": 1}, calls
 
 
-def test_unigram_pipeline_matches_standalone_and_trains_once(
-    spark, sf_smoke, monkeypatch
-):
-    """unigram_pipeline: both outputs row-identical to the standalone
-    entries, with the Viterbi-EM trainer invoked exactly ONCE (it runs
-    twice across the standalone pair)."""
+def test_unigram_pipeline_trains_once(spark, sf_smoke, monkeypatch):
+    """unigram_pipeline invokes the Viterbi-EM trainer exactly ONCE for
+    both outputs, however many of them are collected."""
     from csv_to_parquet_spark.operators import textops as t
     from csv_to_parquet_spark.operators.cache import (
         release_caches,
@@ -634,24 +613,64 @@ def test_unigram_pipeline_matches_standalone_and_trains_once(
     tok = scope_token()
     try:
         out = t.unigram_pipeline(spark, sf_smoke)
-        got_model = sorted(map(tuple, out["model"].collect()))
-        got_fert = sorted(map(tuple, out["fertility"].collect()))
+        assert out["model"].collect() and out["fertility"].collect()
     finally:
         release_caches(tok)
     assert calls["train"] == 1, calls
-    monkeypatch.undo()
+
+
+def test_every_entry_takes_spark_and_sf_dir_only():
+    """One code path per entry: no catalog entry takes an optional
+    frame or model that a caller could thread in instead."""
+    import inspect
+
+    import __spark_entry__ as entry_mod
+
+    extra = {"dedup_connected_components": ["reliable_checkpoint"]}
+    for name, fn in entry_mod.queries().items():
+        params = list(inspect.signature(fn).parameters)
+        assert params == ["spark", "sf_dir"] + extra.get(name, []), (
+            name,
+            params,
+        )
+
+
+#: Jobs one warm call of each chain entry runs at the smoke scale: the
+#: entry selects its output from the shared pipeline, so it pays only
+#: that output's subgraph.
+_CHAIN_JOB_CEILINGS = {
+    "mix_source_weights": 20,
+    "mix_token_allocation": 35,
+    "mix_select_documents": 35,
+    "mix_pack_sequences": 45,
+    "mix_training_order": 46,
+    "tokenizer_unigram_lm": 12,
+    "tokenizer_unigram_fertility": 16,
+}
+
+
+@pytest.mark.parametrize("name", sorted(_CHAIN_JOB_CEILINGS))
+def test_chain_entry_job_ceiling(spark, sf_smoke, name):
+    import __spark_entry__ as entry_mod
+    from csv_to_parquet_spark.operators.cache import (
+        release_caches,
+        scope_token,
+    )
+
+    fn = entry_mod.queries()[name]
+    sc = spark.sparkContext
     tok = scope_token()
     try:
-        want_model = sorted(
-            map(tuple, t.tokenizer_unigram_lm(spark, sf_smoke).collect())
-        )
-        want_fert = sorted(
-            map(
-                tuple,
-                t.tokenizer_unigram_fertility(spark, sf_smoke).collect(),
-            )
-        )
+        fn(spark, sf_smoke).collect()  # warm the schema memo
     finally:
         release_caches(tok)
-    assert got_model == want_model and got_model
-    assert got_fert == want_fert and got_fert
+    group = f"chain-{name}-{os.getpid()}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        fn(spark, sf_smoke).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        release_caches(tok)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= _CHAIN_JOB_CEILINGS[name], len(jobs)

@@ -222,3 +222,21 @@ def test_drift_index_is_additions_only():
     assert '"drift_index": drift_index' in src
     # the timing decision logic still keys ONLY on floors/FLOOR_TOLERANCE
     assert "FLOOR_TOLERANCE * floor" in src
+
+
+def test_simhash_null_text_is_null(spark, monkeypatch):
+    """A NULL text hashes to a NULL token array; the SimHash fold
+    returns NULL for it, as the JVM transform path does, instead of
+    crashing the pandas UDF, and leaves the other rows unchanged."""
+    from csv_to_parquet_spark.operators import dedup as d
+
+    text = "the quick brown fox jumps over the lazy dog"
+    rows = [(1, None), (2, text)]
+    docs = spark.createDataFrame(rows, "doc_id BIGINT, text STRING")
+    monkeypatch.setattr(d, "_docs", lambda spark, sf_dir: docs)
+    sigs = d.dedup_simhash_signatures(spark, "").collect()
+    got = {r.doc_id: r.simhash for r in sigs}
+    alone = spark.createDataFrame(rows[1:], "doc_id BIGINT, text STRING")
+    monkeypatch.setattr(d, "_docs", lambda spark, sf_dir: alone)
+    (want,) = d.dedup_simhash_signatures(spark, "").collect()
+    assert got == {1: None, 2: want.simhash} and want.simhash is not None

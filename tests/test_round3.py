@@ -20,7 +20,6 @@ from pyspark.sql import functions as F
 def test_rotation_window_covers_never_verified(spark):
     from csv_to_parquet_spark.catalog import (
         CANARIES,
-        DEFER_BEHIND_STALE,
         build_catalog,
         load_verified_rounds,
     )
@@ -30,11 +29,7 @@ def test_rotation_window_covers_never_verified(spark):
     assert names[: len(CANARIES)] == CANARIES
     verified = load_verified_rounds()
     never = [
-        n
-        for n in cat.queries
-        if n not in verified
-        and n not in CANARIES
-        and n not in DEFER_BEHIND_STALE  # r10: wait behind the stale drain
+        n for n in cat.queries if n not in verified and n not in CANARIES
     ]
     window = set(names[:50])
     missing = [n for n in never if n not in window]
@@ -42,62 +37,6 @@ def test_rotation_window_covers_never_verified(spark):
     # (when there are more than 45 of them, the earliest 45 win — only
     # possible in round 1, which predates this test)
     assert len(never) > 45 or not missing, f"outside window: {missing}"
-    # Deferred names must sort INSIDE the green tier at their
-    # effective round — after every entry from an older round, before
-    # every entry from a newer one — so the drain proceeds now AND
-    # they cannot be starved once the backlog clears (a last-place
-    # tier would never reach the 45-slot window while 300+ greens
-    # keep refilling it; caught by the r10 review).
-    from csv_to_parquet_spark.catalog import DEFER_EFFECTIVE_ROUND
-
-    pos = {n: i for i, n in enumerate(names)}
-    for n in DEFER_BEHIND_STALE:
-        if n not in cat.queries or n in verified:
-            continue  # self-expired: a driver row now drives its rank
-        for other, rnd in verified.items():
-            if other in CANARIES or other not in pos:
-                continue
-            if rnd < DEFER_EFFECTIVE_ROUND:
-                assert pos[other] < pos[n], (
-                    f"{n} outranks stale {other} (r{rnd}) — drain broken"
-                )
-            elif rnd > DEFER_EFFECTIVE_ROUND:
-                assert pos[n] < pos[other], (
-                    f"{n} starved behind {other} (r{rnd})"
-                )
-
-
-def test_deferred_sort_key_strictly_between_rounds():
-    """ADVICE r10: a deferred name must sort strictly BEFORE a green
-    verified AT DEFER_EFFECTIVE_ROUND (the r10 key tied there and left
-    entry to module_pos) and strictly AFTER a green from the previous
-    round — regardless of module position."""
-    from csv_to_parquet_spark import catalog
-
-    module_pos = {"deferred_q": 0, "green_at_eff": 1, "green_older": 2}
-    verified = {
-        "green_at_eff": catalog.DEFER_EFFECTIVE_ROUND,
-        "green_older": catalog.DEFER_EFFECTIVE_ROUND - 1,
-    }
-    orig = catalog.DEFER_BEHIND_STALE
-    catalog.DEFER_BEHIND_STALE = {"deferred_q"}
-    try:
-        key = lambda n: catalog.rotation_sort_key(  # noqa: E731
-            n, verified, set(), module_pos, {}
-        )
-        # deferred beats the effective-round green even though the
-        # green has the SMALLER... (here larger) module_pos; flip the
-        # positions to prove module_pos cannot decide it either way
-        assert key("deferred_q") < key("green_at_eff")
-        assert key("green_older") < key("deferred_q")
-        module_pos2 = {"deferred_q": 9, "green_at_eff": 0, "green_older": 5}
-        key2 = lambda n: catalog.rotation_sort_key(  # noqa: E731
-            n, verified, set(), module_pos2, {}
-        )
-        assert key2("deferred_q") < key2("green_at_eff")
-        assert key2("green_older") < key2("deferred_q")
-    finally:
-        catalog.DEFER_BEHIND_STALE = orig
 
 
 def test_verified_rounds_snapshot_loads():
