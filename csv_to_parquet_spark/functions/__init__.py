@@ -6,7 +6,9 @@ whole-stage codegen; the LLM-pipeline operators build on these.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from collections.abc import Sequence
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -117,7 +119,82 @@ def shingles_sql(tokens_expr: str, n: int = 3) -> str:
     )
 
 
-TOKENIZE_SQL = "regexp_split_to_array(trim({col}), '\\s+')"
+def two_phase_cumsum(
+    df: DataFrame,
+    values: Sequence[str],
+    order: Sequence[Column | str],
+    buckets: Sequence[str],
+    groups: Sequence[str] = (),
+    totals: bool = False,
+) -> DataFrame:
+    """Exact distributed running sum of each ``values`` column in
+    ``order`` within each ``groups`` key, without a single-partition
+    window over the rows — the two-phase prefix-sum scaffold.
+
+    Phase 1 runs an inclusive running ``sum`` over
+    ``partitionBy(*groups, *buckets).orderBy(*order)`` (ROWS frame,
+    parallel per bucket). Phase 2 totals each ``(*groups, *buckets)``
+    bucket, takes the exclusive running sum of those totals in bucket
+    order per ``groups`` key on that small frame, and broadcast-joins
+    the offsets back. The output is every input column plus
+    ``cum_<v>`` (inclusive, global within the group); ``totals=True``
+    also adds ``n_<v>``, the per-``groups`` total, computed in the
+    same window pass as the offsets and riding the same broadcast —
+    never a scalar cross join, which Catalyst can only run as a
+    nested-loop join.
+
+    Exactness precondition: bucket order must agree with ``order`` —
+    every row of a lower bucket precedes every row of a higher one,
+    e.g. ``doc_id div B`` under ``doc_id``, a value stripe under the
+    value, or ``spark_partition_id()`` after ``repartitionByRange`` on
+    the order key. Ties in ``order`` fall in one bucket, so the ROWS
+    frame breaks them as a single window would; a rank is the running
+    sum of a constant 1 over a unique order. Rows whose bucket or
+    group key is NULL drop out at the inner join.
+
+    Shapes kept out on purpose, since folding them in would make this
+    helper branch on its caller: ``skyline_parts`` (a running max over
+    exclusive frames, combined with ``greatest``),
+    ``events_interval_coverage`` (a per-user window, no global order),
+    ``orders_kaplan_meier`` (a bounded day axis, one small window) and
+    ``stats._rank2_map_bounded`` (at most 50 rows, one window).
+    """
+    keys = [*groups, *buckets]
+    w_in = (
+        Window.partitionBy(*keys)
+        .orderBy(*order)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    w_bkt = Window.partitionBy(*groups).orderBy(*buckets)
+    w_off = w_bkt.rowsBetween(Window.unboundedPreceding, -1)
+    w_all = w_bkt.rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing
+    )
+    offsets = df.groupBy(*keys).agg(
+        *[F.sum(v).alias(f"b_{v}") for v in values]
+    ).select(
+        *keys,
+        *[
+            F.coalesce(F.sum(f"b_{v}").over(w_off), F.lit(0)).alias(f"off_{v}")
+            for v in values
+        ],
+        *[
+            F.sum(f"b_{v}").over(w_all).cast("bigint").alias(f"n_{v}")
+            for v in values
+            if totals
+        ],
+    )
+    within = df.select(
+        "*", *[F.sum(v).over(w_in).alias(f"in_{v}") for v in values]
+    )
+    return within.join(F.broadcast(offsets), keys).select(
+        *df.columns,
+        *[
+            (F.col(f"in_{v}") + F.col(f"off_{v}")).alias(f"cum_{v}")
+            for v in values
+        ],
+        *[f"n_{v}" for v in values if totals],
+    )
 
 
 #: Shared micro-unit quantization grid for every integer-exact

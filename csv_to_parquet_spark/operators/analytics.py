@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from csv_to_parquet_spark.functions import cents, cents_sql
+from csv_to_parquet_spark.functions import cents, cents_sql, two_phase_cumsum
 from csv_to_parquet_spark.operators import Catalog
 from csv_to_parquet_spark.operators.cache import persist_tracked
 from csv_to_parquet_spark.sources.tables import load_table
@@ -1465,17 +1465,17 @@ def hist_equi_depth_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     statistics every optimizer/profiler wants, computed with an exact
     GLOBAL rank but WITHOUT a single-partition global sort.
 
-    The global row number comes from the same two-phase distributed
-    prefix sum as ``pack_token_budget``, keyed by value instead of id:
+    The global row number is the two-phase distributed prefix sum
+    (``functions.two_phase_cumsum``) of a constant 1, keyed by value:
     phase 1 ranks rows inside value-range stripes (cents div STRIPE —
     stripes are contiguous in the sort order by construction, so
     within-stripe rank + stripe offset IS the global rank); phase 2
     cumulates per-stripe counts on the (tiny) stripe-level table and
-    broadcasts the offsets back. Each row's decile is then the pure
-    integer map (rn-1)·B div n — identical arithmetic in the oracle,
-    so bucket membership (not just counts) is engine-exact, including
-    ties, which the (cents, o_orderkey) total order makes
-    deterministic.
+    broadcasts the offsets back with the row total n riding along.
+    Each row's decile is then the pure integer map (rn-1)·B div n —
+    identical arithmetic in the oracle, so bucket membership (not just
+    counts) is engine-exact, including ties, which the
+    (cents, o_orderkey) total order makes deterministic.
 
     At 100 TB: stripes are value-bounded, so a skewed price
     distribution concentrates rows in few stripes — the remedy is a
@@ -1489,27 +1489,18 @@ def hist_equi_depth_price(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", cents("o_totalprice").alias("cts")
     )
     c = c.withColumn("stripe", F.expr(f"cts div {_ED_STRIPE}"))
-    w_in = Window.partitionBy("stripe").orderBy("cts", "o_orderkey")
-    within = c.withColumn("rn_in", F.row_number().over(w_in))
-    w_off = Window.orderBy("stripe").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = (
-        c.groupBy("stripe")
-        .agg(F.count(F.lit(1)).alias("stripe_n"))
-        .withColumn(
-            "offset", F.coalesce(F.sum("stripe_n").over(w_off), F.lit(0))
-        )
-        .select("stripe", "offset")
-    )
-    n1 = c.agg(F.count(F.lit(1)).alias("n"))
-    ranked = (
-        within.join(F.broadcast(offsets), "stripe")
-        .withColumn("rn", F.col("rn_in") + F.col("offset"))
-        .crossJoin(F.broadcast(n1))
+    ranked = two_phase_cumsum(
+        c.withColumn("one", F.lit(1)),
+        ["one"],
+        ["cts", "o_orderkey"],
+        ["stripe"],
+        totals=True,
     )
     return (
         ranked.withColumn(
             "decile",
-            F.expr(f"((rn - 1) * {_ED_BUCKETS}) div n").cast("bigint"),
+            F.expr(f"((cum_one - 1) * {_ED_BUCKETS}) div n_one")
+            .cast("bigint"),
         )
         .groupBy("decile")
         .agg(
@@ -2102,9 +2093,10 @@ def orders_revenue_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     ABC classifies members, Gini is the single audited concentration
     number a health dashboard tracks over time.
 
-    Scale shape: the global rank over per-customer totals reuses the
-    striped two-phase prefix-sum of ``hist_equi_depth_price`` — rank
-    within value-range stripes, add broadcast stripe offsets — so
+    Scale shape: the global rank over per-customer totals is the
+    striped two-phase prefix sum of ``hist_equi_depth_price``
+    (``functions.two_phase_cumsum``) — rank within value-range
+    stripes, add broadcast stripe offsets — so
     there is NO single-partition sort over the customer dimension
     (which is corpus-sized, unlike a calendar). The rank-weighted
     moment Σ rn·x accumulates as decimal(38,0): at 10⁹ customers,
@@ -2118,24 +2110,13 @@ def orders_revenue_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(cents("o_totalprice")).cast("bigint").alias("x"))
     )
     pc = pc.withColumn("stripe", F.expr(f"x div {_GINI_STRIPE}"))
-    w_in = Window.partitionBy("stripe").orderBy("x", "o_custkey")
-    within = pc.withColumn("rn_in", F.row_number().over(w_in))
-    w_off = Window.orderBy("stripe").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = (
-        pc.groupBy("stripe")
-        .agg(F.count(F.lit(1)).alias("stripe_n"))
-        .withColumn(
-            "offset", F.coalesce(F.sum("stripe_n").over(w_off), F.lit(0))
-        )
-        .select("stripe", "offset")
-    )
-    ranked = within.join(F.broadcast(offsets), "stripe").withColumn(
-        "rn", F.col("rn_in") + F.col("offset")
+    ranked = two_phase_cumsum(
+        pc.withColumn("one", F.lit(1)), ["one"], ["x", "o_custkey"], ["stripe"]
     )
     s = ranked.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("x").cast("bigint").alias("s0"),
-        F.sum(F.col("rn").cast("decimal(38,0)") * F.col("x")).alias("s1"),
+        F.sum(F.col("cum_one").cast("decimal(38,0)") * F.col("x")).alias("s1"),
     )
     return s.select(
         F.col("n").alias("n_customers"),

@@ -40,6 +40,7 @@ from csv_to_parquet_spark.functions import (
     shingles,
     shingles_sql,
     tokenize,
+    two_phase_cumsum,
 )
 from csv_to_parquet_spark.operators import Catalog
 from csv_to_parquet_spark.sources.tables import (
@@ -604,39 +605,26 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 # MinHash + LSH
 # ---------------------------------------------------------------------------
 
-def shingle_sets(
-    spark: SparkSession, sf_dir: str, hash_fn: str = "md5"
-) -> DataFrame:
+def shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, shs array<string>, n_sh, hs array<bigint>) — computed as
     a ZERO-shuffle narrow map: the per-doc distinct shingle set is an
     array_distinct over the row's own tokens (no explode, no groupBy),
     and ``hs`` hashes each shingle exactly once via an array transform.
-    At 100 TB this stage is pure scan→project parallelism.
-
-    hash_fn: 'md5' gives the cross-engine-reproducible hash the
-    oracle-exact signature query needs; 'xxhash' is the fast JVM-native
-    path for the LSH pipeline, whose oracle checks the verified
-    *Jaccard pairs*, not the hash values — any uniform hash family is
-    valid there.
+    At 100 TB this stage is pure scan→project parallelism. The hash is
+    md5-derived (:func:`md5_60` mod 2^31-1), so DuckDB reproduces the
+    oracle-exact signature bit for bit.
     """
-    if hash_fn == "md5":
-
-        def h(s: Column) -> Column:
-            return (
-                F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("bigint") % _P31
-            )
-
-    else:
-
-        def h(s: Column) -> Column:
-            return F.pmod(F.xxhash64(s), F.lit(_P31))
-
     shs = F.array_distinct(shingles(tokenize("text"), 3))
     return (
         _docs(spark, sf_dir)
         .select("doc_id", shs.alias("shs"), F.size(shs).alias("n_sh"))
         .filter(F.col("n_sh") > 0)
-        .select("doc_id", "shs", "n_sh", F.transform("shs", h).alias("hs"))
+        .select(
+            "doc_id",
+            "shs",
+            "n_sh",
+            F.transform("shs", lambda x: md5_60(x) % _P31).alias("hs"),
+        )
     )
 
 
@@ -669,11 +657,9 @@ def _minhash_sig() -> Column:
     return sig_udf("hs")
 
 
-def minhash_signatures(
-    spark: SparkSession, sf_dir: str, hash_fn: str = "md5"
-) -> DataFrame:
+def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, sig array<bigint>[64]) — a zero-shuffle narrow map."""
-    sets = shingle_sets(spark, sf_dir, hash_fn)
+    sets = shingle_sets(spark, sf_dir)
     return sets.select("doc_id", _minhash_sig().alias("sig"))
 
 
@@ -2795,12 +2781,12 @@ def mix_select_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned per source by an invariant test.
 
     Plan (r12: one shared scan): the allocation core's single
-    corpus-scale groupBy(fp) exchange, plus the pack_token_budget
-    two-phase prefix-sum scaffold for the per-source running totals —
-    within-(source, doc-bucket) windows run parallel, only the
-    per-(source, bucket) offset frame (corpus/{_SEL_BUCKET} rows) pays
-    a per-source sequential window, and documents pick up their offset
-    through a broadcast join. Both cores read the ONE cached
+    corpus-scale groupBy(fp) exchange, plus the two-phase prefix-sum
+    scaffold (``functions.two_phase_cumsum``) for the per-source
+    running totals — within-(source, doc-bucket) windows run
+    parallel, only the per-(source, bucket) offset frame
+    (corpus/{_SEL_BUCKET} rows) pays a per-source sequential window,
+    and documents pick up their offset through a broadcast join. Both cores read the ONE cached
     :func:`_mix_base` proxy, so the corpus is scanned and tokenized
     once per invocation (was twice). No corpus-wide single-partition
     window: a source with 10¹¹ documents never funnels through one
@@ -2811,9 +2797,9 @@ def mix_select_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _mix_cum_frame(base: DataFrame) -> DataFrame:
     """(doc_id, source, n_tokens, cum_before_tokens) — the per-source
-    token prefix sum in doc_id order, via the pack_token_budget
-    two-phase scaffold (within-(source, bucket) windows run parallel;
-    the per-(source, bucket) offset frame is corpus/_SEL_BUCKET rows).
+    token prefix sum in doc_id order, via :func:`two_phase_cumsum`
+    (within-(source, bucket) windows run parallel; the per-(source,
+    bucket) offset frame is corpus/_SEL_BUCKET rows).
     Shared by the selection, available-token and instance-stream
     steps of :func:`mix_pipeline`. ``base`` is the persisted
     :func:`_mix_base` proxy, so the frame read twice below (within +
@@ -2824,30 +2810,14 @@ def _mix_cum_frame(base: DataFrame) -> DataFrame:
         "n_tokens",
         F.expr(f"doc_id div {_SEL_BUCKET}").alias("bucket"),
     )
-    w_in = (
-        Window.partitionBy("source", "bucket")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    cum = two_phase_cumsum(
+        toks, ["n_tokens"], ["doc_id"], ["bucket"], groups=["source"]
     )
-    within = toks.withColumn("cum_in", F.sum("n_tokens").over(w_in))
-    w_off = (
-        Window.partitionBy("source")
-        .orderBy("bucket")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = (
-        toks.groupBy("source", "bucket")
-        .agg(F.sum("n_tokens").alias("bucket_sum"))
-        .withColumn(
-            "offset", F.coalesce(F.sum("bucket_sum").over(w_off), F.lit(0))
-        )
-        .select("source", "bucket", "offset")
-    )
-    return within.join(F.broadcast(offsets), ["source", "bucket"]).select(
+    return cum.select(
         "doc_id",
         "source",
         "n_tokens",
-        (F.col("cum_in") + F.col("offset") - F.col("n_tokens"))
+        (F.col("cum_n_tokens") - F.col("n_tokens"))
         .cast("bigint")
         .alias("cum_before_tokens"),
     )
@@ -3031,10 +3001,11 @@ def mix_training_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank is engine-independent.
 
     Plan: the instance stream's exchanges, then the distributed
-    zipWithIndex scaffold (:func:`rank_global_two_phase`):
-    range-repartition on the full sort key, per-partition
-    ``row_number`` (parallel), |partitions|-row broadcast offsets — no
-    single-task global window over the 10¹²-instance stream; the
+    zipWithIndex scaffold (:func:`two_phase_cumsum` of a constant 1
+    over partition ids): range-repartition on the full sort key,
+    per-partition running count (parallel), |partitions|-row
+    broadcast offsets — no single-task global window over the
+    10¹²-instance stream; the
     sampled range boundaries are nondeterministic but the unique total
     order makes the FINAL rank exact. Reference: no counterpart
     (converter.go is a per-file converter); SURVEY §2 LLM-dedup
@@ -3119,28 +3090,13 @@ def mix_pipeline(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     # sequences: global two-phase prefix sum over (source, epoch,
     # doc-bucket); the bucket column is a narrow map over cached rows
     bucketed = inst.withColumn("bucket", F.expr(f"doc_id div {_SEL_BUCKET}"))
-    w_in = (
-        Window.partitionBy("source", "epoch", "bucket")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    within = bucketed.withColumn("cum_in", F.sum("n_tokens").over(w_in))
-    w_off = Window.orderBy("source", "epoch", "bucket").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = (
-        bucketed.groupBy("source", "epoch", "bucket")
-        .agg(F.sum("n_tokens").alias("bucket_sum"))
-        .withColumn(
-            "offset", F.coalesce(F.sum("bucket_sum").over(w_off), F.lit(0))
-        )
-        .select("source", "epoch", "bucket", "offset")
-    )
     sequences = (
-        within.join(F.broadcast(offsets), ["source", "epoch", "bucket"])
+        two_phase_cumsum(
+            bucketed, ["n_tokens"], ["doc_id"], ["source", "epoch", "bucket"]
+        )
         .withColumn(
             "bin_id",
-            F.expr(f"(cum_in + offset - 1) div {_PACK_BIN}").cast("bigint"),
+            F.expr(f"(cum_n_tokens - 1) div {_PACK_BIN}").cast("bigint"),
         )
         .groupBy("bin_id")
         .agg(
@@ -3166,26 +3122,17 @@ def mix_pipeline(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
             32, "epoch", "shuffle_key", "source", "doc_id"
         ).withColumn("pid", F.spark_partition_id())
     )
-    w_rank = Window.partitionBy("pid").orderBy(
-        "epoch", "shuffle_key", "source", "doc_id"
-    )
-    w_pid = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    pid_offsets = (
-        r.groupBy("pid")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .withColumn("off", F.coalesce(F.sum("c").over(w_pid), F.lit(0)))
-        .select("pid", "off")
-    )
-    order = (
-        r.withColumn("rn", F.row_number().over(w_rank))
-        .join(F.broadcast(pid_offsets), "pid")
-        .select(
-            "source",
-            "doc_id",
-            "epoch",
-            "shuffle_key",
-            (F.col("rn") + F.col("off")).cast("bigint").alias("train_order"),
-        )
+    order = two_phase_cumsum(
+        r.withColumn("one", F.lit(1)),
+        ["one"],
+        ["epoch", "shuffle_key", "source", "doc_id"],
+        ["pid"],
+    ).select(
+        "source",
+        "doc_id",
+        "epoch",
+        "shuffle_key",
+        F.col("cum_one").alias("train_order"),
     )
     return {
         "weights": weights,

@@ -161,12 +161,10 @@ _COMPACT_TARGET_BYTES = 96 * 1024 * 1024
 
 
 def compact_parquet_dir(
-    spark: SparkSession,
-    src_dir: str,
-    out_dir: str,
-    target_bytes: int = _COMPACT_TARGET_BYTES,
+    spark: SparkSession, src_dir: str, out_dir: str
 ) -> int:
-    """Rewrite a parquet directory into ceil(total/target) files.
+    """Rewrite a parquet directory into ceil(total/_COMPACT_TARGET_BYTES)
+    files.
 
     The small-files problem is the dominant operational tax of
     streaming/incremental ingest at scale: a 100 TB table accreted in
@@ -180,7 +178,7 @@ def compact_parquet_dir(
     total = sum(
         os.path.getsize(p) for p in _glob.glob(os.path.join(src_dir, "*.parquet"))
     )
-    n_files = max(1, math.ceil(total / target_bytes))
+    n_files = max(1, math.ceil(total / _COMPACT_TARGET_BYTES))
     (
         spark.read.parquet(src_dir)
         .repartition(n_files)

@@ -10,7 +10,7 @@ between "clean corpus" and "training batches":
   The core primitive is a global prefix sum of per-document token
   counts. A single global window (``Window.orderBy(...)`` with no
   partitioning) would serialize 100 TB through ONE task, so this
-  implements the classic two-phase distributed scan instead: a
+  runs the two-phase distributed scan ``functions.two_phase_cumsum``: a
   within-bucket cumulative sum (parallel window, partitioned by a
   doc_id range bucket) plus a tiny per-bucket offset table that is
   cumulated on one task (N/BUCKET rows — driver-small by construction)
@@ -33,11 +33,16 @@ between "clean corpus" and "training batches":
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from csv_to_parquet_spark.functions import md5_60, md5_60_sql, tokenize
+from csv_to_parquet_spark.functions import (
+    md5_60,
+    md5_60_sql,
+    tokenize,
+    two_phase_cumsum,
+)
 from csv_to_parquet_spark.operators import Catalog
 from csv_to_parquet_spark.operators.cache import persist_tracked
 from csv_to_parquet_spark.sources.tables import load_table, spread
@@ -101,31 +106,10 @@ def pack_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     # every document. Spill-safe (MEMORY_AND_DISK default) and released
     # by the harness via release_caches() after materialization.
     toks = persist_tracked(toks)
-    # Phase 1: parallel within-bucket running sums.
-    w_in = (
-        Window.partitionBy("bucket")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    within = toks.withColumn("cum_in", F.sum("n_tokens").over(w_in))
-    # Phase 2: per-bucket totals (N/BUCKET rows) → exclusive running
-    # offset on one task (tiny by construction) → broadcast back.
-    w_off = (
-        Window.orderBy("bucket")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = (
-        toks.groupBy("bucket")
-        .agg(F.sum("n_tokens").alias("bucket_sum"))
-        .withColumn("offset", F.coalesce(F.sum("bucket_sum").over(w_off), F.lit(0)))
-        .select("bucket", "offset")
-    )
-    cum = within.join(F.broadcast(offsets), "bucket").withColumn(
-        "cum_tokens", F.col("cum_in") + F.col("offset")
-    )
+    cum = two_phase_cumsum(toks, ["n_tokens"], ["doc_id"], ["bucket"])
     return (
         cum.withColumn(
-            "bin_id", F.expr(f"(cum_tokens - 1) div {BUDGET}").cast("bigint")
+            "bin_id", F.expr(f"(cum_n_tokens - 1) div {BUDGET}").cast("bigint")
         )
         .groupBy("bin_id")
         .agg(

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from csv_to_parquet_spark.functions import cents
+from csv_to_parquet_spark.functions import cents, two_phase_cumsum
 from csv_to_parquet_spark.operators import Catalog
 from csv_to_parquet_spark.operators.cache import persist_tracked
 from csv_to_parquet_spark.sources.tables import load_table
@@ -822,10 +822,11 @@ def rank_global_two_phase(spark: SparkSession, sf_dir: str) -> DataFrame:
     The distributed zipWithIndex pattern: (1) range-repartition on the
     full sort key, so partition p holds exactly the keys between
     sampled boundaries and partition ids ascend with the key order;
-    (2) a PER-PARTITION row_number (window partitioned by
+    (2) a PER-PARTITION running count (window partitioned by
     ``spark_partition_id()`` — parallel); (3) per-partition counts
     roll into broadcast exclusive offsets (one tiny frame, |partitions|
-    rows). global_rank = local rn + offset[pid]. The sampled range
+    rows). global_rank = local rn + offset[pid] — the running sum of a
+    constant 1 through ``functions.two_phase_cumsum``. The sampled range
     boundaries are nondeterministic, but the FINAL rank is not: the
     total order (price_cents, o_orderkey) is unique, and where a row
     lands cannot change its rank — only which partition computes it.
@@ -839,22 +840,13 @@ def rank_global_two_phase(spark: SparkSession, sf_dir: str) -> DataFrame:
         "pid", F.spark_partition_id()
     )
     r = persist_tracked(r)  # feeds the window AND the offset counts
-    w_in = Window.partitionBy("pid").orderBy("price_cents", "o_orderkey")
-    w_off = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = (
-        r.groupBy("pid")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .withColumn("off", F.coalesce(F.sum("c").over(w_off), F.lit(0)))
-        .select("pid", "off")
-    )
-    return (
-        r.withColumn("rn", F.row_number().over(w_in))
-        .join(F.broadcast(offsets), "pid")
-        .select(
-            "o_orderkey",
-            "price_cents",
-            (F.col("rn") + F.col("off")).cast("bigint").alias("global_rank"),
-        )
+    return two_phase_cumsum(
+        r.withColumn("one", F.lit(1)),
+        ["one"],
+        ["price_cents", "o_orderkey"],
+        ["pid"],
+    ).select(
+        "o_orderkey", "price_cents", F.col("cum_one").alias("global_rank")
     )
 
 

@@ -19,8 +19,8 @@ micro-floored outputs cannot straddle a boundary differently.
 
 Scale posture: the ECDF-family statistics (KS, Mann-Whitney) need a
 global cumulative count over the VALUE domain — the classic
-distributed-unfriendly shape. They reuse the two-phase prefix-sum
-pattern of ``pack_token_budget``: value-ordered buckets give parallel
+distributed-unfriendly shape. They run the two-phase prefix sum
+``functions.two_phase_cumsum``: value-ordered buckets give parallel
 within-bucket window sums, per-bucket totals (tiny by construction)
 roll into broadcast offsets. No global single-partition sort anywhere;
 the only single-task step is over the bucket-totals frame, whose size
@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from csv_to_parquet_spark.functions import cents
+from csv_to_parquet_spark.functions import cents, two_phase_cumsum
 from csv_to_parquet_spark.operators import Catalog
 from csv_to_parquet_spark.sources.tables import load_table
 
@@ -58,68 +58,14 @@ _GRP_A = "1-URGENT"
 _GRP_B = "5-LOW"
 
 
-def _bucketed_cumsum(
-    df: DataFrame,
-    val_col: str,
-    cnt_cols: list[str],
-    bucket_width: int,
-    with_totals: bool = False,
-) -> DataFrame:
-    """THE two-phase exact distributed prefix sum this module is built
-    on (previously four hand-maintained copies — r7 review): bucket =
-    val div width preserves value order, so parallel WITHIN-bucket
-    window cumulatives plus broadcast EXCLUSIVE bucket offsets compose
-    to the exact global cumulative — no single-partition global sort.
-
-    Adds ``cum_<c>`` per count column; every other input column passes
-    through. ``with_totals`` additionally rides the grand totals along
-    on the (tiny, already single-task) bucket-offsets frame as
-    constant ``n_<c>`` columns — ONE broadcast hash join delivers
-    offsets AND totals, never a scalar cross join (Catalyst can only
-    run that as a nested-loop join).
-    """
-    v = df.withColumn("bucket", F.expr(f"{val_col} div {bucket_width}"))
-    w_in = (
-        Window.partitionBy("bucket")
-        .orderBy(val_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    within = v
-    for c in cnt_cols:
-        within = within.withColumn(f"cum_{c}", F.sum(c).over(w_in))
-    w_off = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = v.groupBy("bucket").agg(
-        *[F.sum(c).alias(f"b_{c}") for c in cnt_cols]
-    )
-    keep = ["bucket"]
-    for c in cnt_cols:
-        offsets = offsets.withColumn(
-            f"off_{c}", F.coalesce(F.sum(f"b_{c}").over(w_off), F.lit(0))
-        )
-        keep.append(f"off_{c}")
-    if with_totals:
-        w_all = Window.partitionBy().rowsBetween(
-            Window.unboundedPreceding, Window.unboundedFollowing
-        )
-        for c in cnt_cols:
-            offsets = offsets.withColumn(
-                f"n_{c}", F.sum(f"b_{c}").over(w_all).cast("bigint")
-            )
-            keep.append(f"n_{c}")
-    out = within.join(F.broadcast(offsets.select(*keep)), "bucket")
-    for c in cnt_cols:
-        out = out.withColumn(f"cum_{c}", F.col(f"cum_{c}") + F.col(f"off_{c}"))
-    return out.drop(*[f"off_{c}" for c in cnt_cols])
-
-
 def _ecdf_counts(spark: SparkSession, sf_dir: str):
     """Shared KS / Mann-Whitney scaffold.
 
     Returns (per-value frame with exact cumulative counts, totals):
     one row per distinct o_totalprice cents value carrying
-    (val, c1, c2, cum1, cum2) and the scalar totals (n1, n2) attached
-    as constant columns via a 1-row broadcast (house-approved scalar
-    attach). Two-phase prefix sum as in ``pack_token_budget``:
+    (val, c1, c2, cum1, cum2) and the scalar totals (n1, n2) as
+    constant columns, riding the broadcast offsets frame. Two-phase
+    prefix sum (:func:`two_phase_cumsum`):
     bucket = val div 2^20 preserves value order, so within-bucket
     window sums + exclusive bucket offsets compose to the exact global
     cumulative — no single-partition global sort.
@@ -139,8 +85,9 @@ def _ecdf_counts(spark: SparkSession, sf_dir: str):
             F.sum("i2").cast("bigint").alias("c2"),
         )
     )
+    v = v.withColumn("bucket", F.expr(f"val div {_KS_BUCKET}"))
     return (
-        _bucketed_cumsum(v, "val", ["c1", "c2"], _KS_BUCKET, with_totals=True)
+        two_phase_cumsum(v, ["c1", "c2"], ["val"], ["bucket"], totals=True)
         .withColumnRenamed("cum_c1", "cum1")
         .withColumnRenamed("cum_c2", "cum2")
         .withColumnRenamed("n_c1", "n1")
@@ -674,12 +621,9 @@ def _rank2_map_bounded(vals: DataFrame) -> DataFrame:
     2*cnt_less + cnt_eq + 1 (exact integer, tie-correct), for a
     DOMAIN-BOUNDED value histogram (the y side: l_quantity ∈ 1..50 at
     every scale factor) — one global-order window over the ≤50-row
-    frame. r12 and earlier ran the full :func:`_bucketed_cumsum`
-    scaffold here (bucket width 64 ⇒ a single bucket, so its
-    within-bucket window WAS this global window plus a constant-zero
-    offsets join); the direct window drops the scaffold's two extra
-    exchanges and broadcast join from a frame where two-phase
-    composition buys nothing (r13, guide §2.4)."""
+    frame. :func:`two_phase_cumsum` would buy nothing here: one
+    bucket covers the domain, so it would add two exchanges and a
+    broadcast join of constant-zero offsets to this same window."""
     w = (
         Window.orderBy("val")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -795,7 +739,8 @@ def stats_spearman_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # two-phase doubled ranks over the distinct-x frame; t_x/t2_x pass
     # through the shared scaffold untouched
-    xfull = _bucketed_cumsum(xagg, "x", ["cnt"], _RANK_BUCKET).withColumn(
+    xagg = xagg.withColumn("bucket", F.expr(f"x div {_RANK_BUCKET}"))
+    xfull = two_phase_cumsum(xagg, ["cnt"], ["x"], ["bucket"]).withColumn(
         "r2x",
         F.lit(2) * F.col("cum_cnt") - F.col("cnt") + F.lit(1),
     )
@@ -875,7 +820,13 @@ def stats_winsorized_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     from csv_to_parquet_spark.operators.cache import persist_tracked
 
     vals = persist_tracked(vals)
-    cum = _bucketed_cumsum(vals, "val", ["cnt"], _KS_BUCKET, with_totals=True)
+    cum = two_phase_cumsum(
+        vals.withColumn("bucket", F.expr(f"val div {_KS_BUCKET}")),
+        ["cnt"],
+        ["val"],
+        ["bucket"],
+        totals=True,
+    )
     bounds = cum.agg(
         F.max("n_cnt").alias("n"),
         F.min(

@@ -27,14 +27,11 @@ from csv_to_parquet_spark.functions import (
     shingles,
     shingles_sql,
     tokenize,
+    two_phase_cumsum,
 )
 from csv_to_parquet_spark.operators import Catalog
 from csv_to_parquet_spark.operators.cache import persist_tracked as _persist
-from csv_to_parquet_spark.sources.tables import (
-    load_table,
-    parquet_row_count,
-    spread,
-)
+from csv_to_parquet_spark.sources.tables import load_table, spread
 
 CAT = Catalog()
 
@@ -3565,36 +3562,18 @@ def text_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (lang, score) histogram is NOT model-sized (integer per-doc
     # scores are near-unique, so it grows with the corpus — r9 review
     # finding), so the cumulative uses the two-phase prefix-sum
-    # scaffold (stats._bucketed_cumsum / pack_token_budget): scores
-    # bucket by div 2^20 (≈1 nat), within-(lang,bucket) window sums
-    # run parallel, and ONLY the per-(lang,bucket) offsets frame —
-    # score_range/2^20 rows per language, corpus-independent — is
-    # broadcast back with the per-lang totals riding along.
-    v = hist.withColumn(
-        "bkt", F.expr("per_bigram_micro div 1048576")
-    )
-    w_in = (
-        Window.partitionBy("lang", "bkt")
-        .orderBy("per_bigram_micro")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    within = v.withColumn("cum_in", F.sum("h").over(w_in))
-    w_off = (
-        Window.partitionBy("lang")
-        .orderBy("bkt")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = (
-        v.groupBy("lang", "bkt")
-        .agg(F.sum("h").alias("bh"))
-        .withColumn("off", F.coalesce(F.sum("bh").over(w_off), F.lit(0)))
-        .withColumn("n", F.sum("bh").over(Window.partitionBy("lang")))
-        .select("lang", "bkt", "off", "n")
-    )
-    bmap = within.join(F.broadcast(offsets), ["lang", "bkt"]).select(
+    # scaffold (functions.two_phase_cumsum): scores bucket by div 2^20
+    # (≈1 nat), within-(lang,bucket) window sums run parallel, and
+    # ONLY the per-(lang,bucket) offsets frame — score_range/2^20 rows
+    # per language, corpus-independent — is broadcast back with the
+    # per-lang totals riding along.
+    v = hist.withColumn("bkt", F.expr("per_bigram_micro div 1048576"))
+    bmap = two_phase_cumsum(
+        v, ["h"], ["per_bigram_micro"], ["bkt"], groups=["lang"], totals=True
+    ).select(
         "lang",
         "per_bigram_micro",
-        F.expr("((cum_in + off - h) * 3) div n + 1").alias("b"),
+        F.expr("((cum_h - h) * 3) div n_h + 1").alias("b"),
     )
     bucket = (
         F.when(F.col("b") == 1, "head")
@@ -3685,11 +3664,12 @@ def sample_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     join, which is a BROADCAST of the model against the stream — no
     corpus-keyed exchange at all for scoring; the per-doc weight agg is
     the one corpus shuffle. Ranking uses the two-phase global
-    row-number scaffold (:func:`rank_global_two_phase`): range-
-    repartition on the unique (weight DESC, doc_id) key, per-partition
-    window, broadcast exclusive offsets — globally consecutive ranks
-    with no single-task sort. K = ceil(n/4) comes from the offsets
-    frame (scalar), so `selected` is a projection, not a second pass.
+    row-number scaffold (:func:`two_phase_cumsum` of a constant 1):
+    range-repartition on the unique (weight DESC, doc_id) key,
+    per-partition window, broadcast exclusive offsets — globally
+    consecutive ranks with no single-task sort. K = ceil(n/4) comes
+    from the totals on the offsets frame, so `selected` is a
+    projection, not a second pass.
     """
     docs = _docs(spark, sf_dir).filter(F.length(F.trim("text")) > 0)
     f = docs.select(
@@ -3736,29 +3716,19 @@ def sample_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
         32, F.desc("weight_micro"), F.asc("doc_id")
     ).withColumn("pid", F.spark_partition_id())
     r = _persist(r)
-    w_in = Window.partitionBy("pid").orderBy(
-        F.desc("weight_micro"), F.asc("doc_id")
+    ranked = two_phase_cumsum(
+        r.withColumn("one", F.lit(1)),
+        ["one"],
+        [F.desc("weight_micro"), F.asc("doc_id")],
+        ["pid"],
+        totals=True,
     )
-    w_off = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = (
-        r.groupBy("pid")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .withColumn("off", F.coalesce(F.sum("cnt").over(w_off), F.lit(0)))
-        .withColumn("n", F.sum("cnt").over(Window.partitionBy()))
-        .select("pid", "off", "n")
-    )
-    return (
-        r.withColumn("rn", F.row_number().over(w_in))
-        .join(F.broadcast(offsets), "pid")
-        .select(
-            "doc_id",
-            "n_tokens",
-            "weight_micro",
-            (F.col("rn") + F.col("off")).cast("bigint").alias("sel_rank"),
-            (
-                (F.col("rn") + F.col("off")) <= F.expr("(n + 3) div 4")
-            ).alias("selected"),
-        )
+    return ranked.select(
+        "doc_id",
+        "n_tokens",
+        "weight_micro",
+        F.col("cum_one").alias("sel_rank"),
+        (F.col("cum_one") <= F.expr("(n_one + 3) div 4")).alias("selected"),
     )
 
 
@@ -4246,7 +4216,7 @@ def text_url_domain_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     registrable-domain cardinality is ~10⁷ with the hottest domains at
     ~10⁶ docs — a single window partition per domain holds; a truly
     degenerate domain would switch to the two-phase rank scaffold
-    (rank_global_two_phase) keyed on (domain, doc_id-bucket).
+    (functions.two_phase_cumsum) keyed on (domain, doc_id-bucket).
     Reference: no counterpart (converter.go is a per-file converter);
     SURVEY §2 LLM-text extension."""
     h = md5_60(F.col("doc_id").cast("string"))
@@ -4305,91 +4275,6 @@ _ULM_MAXP = 4
 _ULM_K = 48
 #: Viterbi-EM rounds (segment -> recount -> Laplace+1 recost).
 _ULM_ITERS = 2
-
-
-#: Corpus-size gate for the Arrow Viterbi kernel (VERDICT r12 #4 /
-#: measured dead end #4): below this many DOCUMENTS (parquet footer
-#: metadata, zero Spark jobs) segmentation stays the codegen HOF fold —
-#: the sf0.1 fixture has 31 word types, where a per-EM-round Arrow
-#: worker roundtrip measurably LOSES (0.465 s fold vs 0.547 s kernel).
-#: Above it, the fold's try_element_at(create_map(~150 literals)) costs
-#: a linear scan per probe (~7 200 interpreted string compares per word
-#: type) and the dict+numpy DP kernel wins by construction. Both paths
-#: are exact and tie-identical; the gate is a performance knob only.
-_ULM_KERNEL_MIN_DOCS = 1_000_000
-
-
-def _ulm_use_kernel(sf_dir: str) -> bool:
-    """True when the corpus is large enough that the Arrow DP kernel
-    beats the interpreted fold — decided from the documents parquet
-    FOOTER row count (no Spark job; see parquet_row_count). An unknown
-    count (remote, missing, unreadable or corrupt) falls back to the
-    fold."""
-    import os
-
-    n = parquet_row_count(os.path.join(sf_dir, "documents.parquet"))
-    return n is not None and n >= _ULM_KERNEL_MIN_DOCS
-
-
-def _ulm_viterbi_udf(cost: dict):
-    """Arrow pandas_udf twin of :func:`_ulm_viterbi_pieces`: the same
-    longest-piece-first / strictly-smaller-cost Viterbi DP, run as a
-    dict+list kernel per batch of word types instead of the interpreted
-    expression fold. Integer costs end to end — no float anywhere — and
-    the identical tie rule, so the segmentation is equal word-for-word
-    (pinned by tests against the fold AND the pure-Python reference).
-    Assumes the trainer's coverage invariant (every character of every
-    input word is in ``cost``), which both callers guarantee: the seed
-    vocabulary contains all corpus single chars and pruning never drops
-    a single char."""
-    from pyspark.sql.functions import pandas_udf
-
-    items = sorted(cost.items())
-
-    @pandas_udf("array<string>")
-    def seg(ws: pd.Series) -> pd.Series:
-        c = dict(items)
-        maxp = _ULM_MAXP
-        out = []
-        for w in ws:
-            if w is None:  # NULL in, NULL out — as the fold
-                out.append(None)
-                continue
-            n = len(w)
-            dp = [0] + [None] * n
-            bk = [0] * (n + 1)
-            for i in range(1, n + 1):
-                best, b_l = None, 0
-                for L in range(maxp, 0, -1):
-                    if L > i:
-                        continue
-                    pc = c.get(w[i - L:i])
-                    if pc is None:
-                        continue
-                    prev = dp[i - L]
-                    if prev is None:
-                        continue
-                    cand = prev + pc
-                    if best is None or cand < best:
-                        best, b_l = cand, L
-                dp[i] = best
-                bk[i] = b_l
-            ps, pos = [], n
-            while pos > 0 and bk[pos] > 0:
-                ps.append(w[pos - bk[pos]:pos])
-                pos -= bk[pos]
-            out.append(ps[::-1])
-        return pd.Series(out)
-
-    return seg
-
-
-def _ulm_segment(w, cost: dict, use_kernel: bool):
-    """Segmentation column factory: the codegen fold below the gate,
-    the Arrow kernel above it (see _ULM_KERNEL_MIN_DOCS)."""
-    if use_kernel:
-        return _ulm_viterbi_udf(cost)(w)
-    return _ulm_viterbi_pieces(w, cost)
 
 
 def _ulm_viterbi_pieces(w, cost: dict):
@@ -4510,18 +4395,11 @@ def _ulm_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def unigram_lm_model(
-    words: DataFrame, use_kernel: bool = False
-) -> list[tuple]:
+def unigram_lm_model(words: DataFrame) -> list[tuple]:
     """Train the unigram LM on a word-type histogram ``words``
     (columns: w string, f bigint) and return the final model rows
     ``(piece, piece_len, viterbi_count, cost_micro, kept)`` — factored
     so tests can run the identical estimator on planted histograms.
-
-    ``use_kernel`` selects the Arrow DP kernel for the per-round
-    segmentation (see _ULM_KERNEL_MIN_DOCS; entries pass the
-    footer-derived gate, tests force either path) — same model either
-    way.
 
     Shape (the ``bpe_learn_merges`` discipline): the corpus appears
     only through the histogram; every EM round segments WORD TYPES
@@ -4585,9 +4463,7 @@ def unigram_lm_model(
     for _ in range(_ULM_ITERS):
         seg = words.select(
             "f",
-            F.explode(
-                _ulm_segment(F.col("w"), cost, use_kernel)
-            ).alias("piece"),
+            F.explode(_ulm_viterbi_pieces(F.col("w"), cost)).alias("piece"),
         )
         got = {
             r.piece: r.c
@@ -4883,13 +4759,12 @@ def unigram_pipeline(
     ``operators.cache.release_caches`` when done, as bench does.
     Reference: no counterpart (converter.go is a per-file converter);
     SURVEY §2 LLM-text extension (the mix_pipeline convention)."""
-    use_kernel = _ulm_use_kernel(sf_dir)
     words = _ulm_words(spark, sf_dir)
-    model = unigram_lm_model(words, use_kernel=use_kernel)
+    model = unigram_lm_model(words)
     kept_cost = {p: cost for p, _, _, cost, kept in model if kept}
     segn = words.select(
         "w",
-        F.size(_ulm_segment(F.col("w"), kept_cost, use_kernel))
+        F.size(_ulm_viterbi_pieces(F.col("w"), kept_cost))
         .cast("bigint")
         .alias("n_pieces"),
     )

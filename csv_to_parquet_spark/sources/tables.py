@@ -59,11 +59,6 @@ TABLE_NAMES = [
     "embeddings",
 ]
 
-# Dimension tables small enough to broadcast at *any* scale factor
-# (region/nation are fixed-size; supplier/part grow slowly). Operators
-# use this to decide broadcast hints.
-BROADCAST_DIMS = {"region", "nation", "supplier", "part"}
-
 _RUNTIME_CONFS = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.legacy.parquet.nanosAsLong": "true",

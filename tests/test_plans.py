@@ -254,7 +254,6 @@ _BNLJ_ALLOW = {
     "lineitem_pareto_abc",  # 1-row revenue-total broadcast for shares
     "events_distribution_drift",  # 1-row bounds + 1-row totals broadcasts
     "contingency_brand_type",  # 1-row grand-total broadcast
-    "hist_equi_depth_price",  # 1-row total-count broadcast for decile map
     "feat_target_encoding",  # 1-row global-prior broadcast
     "text_unigram_logprob",  # 1-row corpus-token-total broadcast
     "embedding_prefix_rank_audit",  # tiny broadcast query set, != join
@@ -453,3 +452,94 @@ def test_no_untracked_persists_in_operators():
                 if ".persist(" in line and "persist_tracked" not in line:
                     offenders.append(f"{path}:{i}: {line.strip()}")
     assert not offenders, "\n".join(offenders)
+
+
+def test_two_phase_cumsum_matches_single_window(spark):
+    """The two-phase prefix sum equals one plain window over a planted
+    frame: two groups, several buckets per group (one of them a single
+    row), a negative value, a rank column (constant 1), per-group
+    totals, and every input column kept. The offsets reach the rows
+    through a broadcast join."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from csv_to_parquet_spark.functions import two_phase_cumsum
+
+    rows = [("x", k, (k * 7) % 5 - 1) for k in (0, 1, 2, 3, 4, 5, 6, 7, 8, 12)]
+    rows += [("y", k, k + 3) for k in (1, 2, 6, 9, 10)]
+    df = spark.createDataFrame(rows, "g STRING, k BIGINT, v BIGINT")
+    df = df.withColumn("b", F.expr("k div 3")).withColumn("one", F.lit(1))
+
+    out = two_phase_cumsum(df, ["v", "one"], ["k"], ["b"], ["g"], totals=True)
+    assert out.columns == df.columns + ["cum_v", "cum_one", "n_v", "n_one"]
+    assert "BroadcastHashJoin" in _plan(out)
+    w = Window.partitionBy("g").orderBy("k")
+    w_run = w.rowsBetween(Window.unboundedPreceding, 0)
+    ref = df.select(
+        "*",
+        F.sum("v").over(w_run).alias("cum_v"),
+        F.row_number().over(w).cast("bigint").alias("cum_one"),
+        F.sum("v").over(Window.partitionBy("g")).alias("n_v"),
+        F.count(F.lit(1)).over(Window.partitionBy("g")).alias("n_one"),
+    )
+    got = sorted(map(tuple, out.collect()))
+    assert got == sorted(map(tuple, ref.collect()))
+    assert len(got) == len(rows)
+    # one global order over (g, k): groups become the leading bucket
+    # key, and totals are off
+    out = two_phase_cumsum(df, ["v"], ["k"], ["g", "b"])
+    assert out.columns == df.columns + ["cum_v"]
+    w = Window.orderBy("g", "k").rowsBetween(Window.unboundedPreceding, 0)
+    ref = df.select("*", F.sum("v").over(w).alias("cum_v"))
+    got = sorted(map(tuple, out.collect()))
+    assert got == sorted(map(tuple, ref.collect()))
+
+
+#: Entries whose exclusive running window is not a global prefix sum
+#: (see the ``two_phase_cumsum`` docstring for why each stays apart).
+_OWN_EXCLUSIVE_WINDOW = {
+    "skyline_parts",
+    "events_interval_coverage",
+    "orders_kaplan_meier",
+}
+
+
+def test_exclusive_running_windows_go_through_the_helper():
+    """Outside ``functions/``, no operator builds a
+    ``rowsBetween(Window.unboundedPreceding, -1)`` window except the
+    allowlisted entries: every two-phase prefix sum calls
+    ``functions.two_phase_cumsum`` instead of copying its scaffold."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "csv_to_parquet_spark"
+
+    def exclusive_frame(node):
+        if not (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "rowsBetween"
+            and len(node.args) == 2
+        ):
+            return False
+        lo, hi = node.args
+        return (
+            isinstance(lo, ast.Attribute)
+            and lo.attr == "unboundedPreceding"
+            and isinstance(hi, ast.UnaryOp)
+            and isinstance(hi.op, ast.USub)
+            and getattr(hi.operand, "value", None) == 1
+        )
+
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        if "functions" in path.relative_to(pkg).parts:
+            continue
+        tree = ast.parse(path.read_text())
+        for top in tree.body:
+            for node in ast.walk(top):
+                if exclusive_frame(node):
+                    owner = getattr(top, "name", "<module>")
+                    if owner not in _OWN_EXCLUSIVE_WINDOW:
+                        offenders.append(f"{path.name}:{node.lineno} {owner}")
+    assert not offenders, offenders

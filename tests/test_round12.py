@@ -442,7 +442,7 @@ def test_stupid_backoff_levels_partition_and_train_docs_hit(spark, sf_smoke):
 
 def test_unigram_viterbi_fold_matches_reference_on_random_words(spark):
     """Adversarial cross-check of the codegen DP fold against the
-    pure-Python reference on one seeded batch of random words —
+    pure-Python reference on two seeded batches of random words —
     repeated chars (tie storms), length-1 and length-12 extremes,
     costs with deliberate equal-sum collisions. Pins the fold's
     clamped element_at indexing and the longest-piece tie rule."""
@@ -454,8 +454,11 @@ def test_unigram_viterbi_fold_matches_reference_on_random_words(spark):
         _ulm_viterbi_pieces,
     )
 
-    rng = random.Random(1234)
     alphabet = "abc"
+    # two seeded batches of words over a 3-char alphabet (tie storms),
+    # each with its own cost table: all chars + random multi pieces,
+    # some with EQUAL costs so tie-breaking is actually exercised
+    rng = random.Random(1234)
     words = sorted(
         {
             "".join(
@@ -465,8 +468,6 @@ def test_unigram_viterbi_fold_matches_reference_on_random_words(spark):
             for _ in range(200)
         }
     )
-    # cost table: all chars + random multi pieces, some with EQUAL
-    # costs so tie-breaking is actually exercised
     cost = {c: 1000 for c in alphabet}
     pieces = set()
     for _ in range(60):
@@ -476,8 +477,26 @@ def test_unigram_viterbi_fold_matches_reference_on_random_words(spark):
         )
     for p in sorted(pieces):
         cost[p] = rng.choice([900, 1500, 2000, len(p) * 1000])
+    cases = [(words, cost)]
 
-    def ref_seg(w):
+    rng = random.Random(4321)
+    words = sorted(
+        {
+            "".join(
+                rng.choice(alphabet) for _ in range(rng.randint(1, 12))
+            )
+            for _ in range(300)
+        }
+    )
+    cost = {c: 1000 for c in alphabet}
+    for _ in range(70):
+        p = "".join(
+            rng.choice(alphabet) for _ in range(rng.randint(2, 4))
+        )
+        cost[p] = rng.choice([900, 1500, 2000, len(p) * 1000])
+    cases.append((words, cost))
+
+    def ref_seg(w, cost):
         dp = [0] + [None] * len(w)
         bk = [0] * (len(w) + 1)
         for i in range(1, len(w) + 1):
@@ -499,16 +518,18 @@ def test_unigram_viterbi_fold_matches_reference_on_random_words(spark):
             pos -= bk[pos]
         return list(reversed(ps))
 
-    wdf = spark.createDataFrame([(w,) for w in words], "w STRING")
-    got = {
-        r.w: list(r.ps)
-        for r in wdf.select(
-            "w", _ulm_viterbi_pieces(F.col("w"), cost).alias("ps")
-        ).collect()
-    }
-    for w in words:
-        assert got[w] == ref_seg(w), (w, got[w], ref_seg(w))
-        assert "".join(got[w]) == w
+    for words, cost in cases:
+        wdf = spark.createDataFrame([(w,) for w in words], "w STRING")
+        got = {
+            r.w: list(r.ps)
+            for r in wdf.select(
+                "w", _ulm_viterbi_pieces(F.col("w"), cost).alias("ps")
+            ).collect()
+        }
+        for w in words:
+            want = ref_seg(w, cost)
+            assert got[w] == want, (w, got[w], want)
+            assert "".join(got[w]) == w
 
 
 def test_workers_import_package_under_session_reuse(tmp_path):

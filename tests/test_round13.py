@@ -87,116 +87,18 @@ def test_cos_kernel_chunking_is_bit_identical(spark, sf_smoke, monkeypatch):
     assert base == chunked and base
 
 
-def _planted_vocab_words(n_types: int, seed: int = 77):
-    """A planted word-type histogram with a REAL vocabulary (unlike
-    the 31-word-type sf0.1 corpus): words over a 12-char alphabet,
-    lengths 1..12, skewed frequencies — the fixture the Arrow Viterbi
-    kernel exists for (VERDICT r12 #4)."""
-    import random
-
-    rng = random.Random(seed)
-    alphabet = "abcdefghijkl"
-    words = {}
-    while len(words) < n_types:
-        w = "".join(
-            rng.choice(alphabet) for _ in range(rng.randint(1, 12))
-        )
-        words.setdefault(w, rng.randint(1, 500))
-    return sorted(words.items())
-
-
-def test_unigram_kernel_and_fold_learn_identical_model(spark):
-    """The gated Arrow DP kernel must train the IDENTICAL model to the
-    codegen fold on a planted 600-type histogram — same vocabulary,
-    same Viterbi counts, same micro-nat costs, same prune flags."""
-    from csv_to_parquet_spark.operators.textops import unigram_lm_model
-
-    wdf = spark.createDataFrame(
-        _planted_vocab_words(600), "w STRING, f BIGINT"
-    )
-    fold = unigram_lm_model(wdf, use_kernel=False)
-    wdf2 = spark.createDataFrame(
-        _planted_vocab_words(600), "w STRING, f BIGINT"
-    )
-    kernel = unigram_lm_model(wdf2, use_kernel=True)
-    assert fold == kernel and len(fold) > 12
-
-
-def test_unigram_kernel_segmentation_matches_fold(spark):
-    """Word-for-word segmentation parity of the kernel against the
-    fold on adversarial words (tie storms, length extremes) under a
-    cost table with planted equal-cost collisions."""
-    import random
-
+def test_unigram_fold_null_word_is_null(spark):
+    """A NULL word segments to NULL in the codegen fold."""
     from pyspark.sql import functions as F
 
-    from csv_to_parquet_spark.operators.textops import (
-        _ulm_viterbi_pieces,
-        _ulm_viterbi_udf,
-    )
-
-    rng = random.Random(4321)
-    alphabet = "abc"
-    words = sorted(
-        {
-            "".join(
-                rng.choice(alphabet) for _ in range(rng.randint(1, 12))
-            )
-            for _ in range(300)
-        }
-    )
-    cost = {c: 1000 for c in alphabet}
-    for _ in range(70):
-        p = "".join(
-            rng.choice(alphabet) for _ in range(rng.randint(2, 4))
-        )
-        cost[p] = rng.choice([900, 1500, 2000, len(p) * 1000])
-    wdf = spark.createDataFrame([(w,) for w in words], "w STRING")
-    fold = {
-        r.w: list(r.ps)
-        for r in wdf.select(
-            "w", _ulm_viterbi_pieces(F.col("w"), cost).alias("ps")
-        ).collect()
-    }
-    kern = {
-        r.w: list(r.ps)
-        for r in wdf.select(
-            "w", _ulm_viterbi_udf(cost)(F.col("w")).alias("ps")
-        ).collect()
-    }
-    assert fold == kern
-    for w in words:
-        assert "".join(kern[w]) == w
-
-
-def test_unigram_kernel_null_word_is_null(spark):
-    """A NULL word segments to NULL, as in the codegen fold, instead
-    of crashing the Arrow kernel."""
-    from pyspark.sql import functions as F
-
-    from csv_to_parquet_spark.operators.textops import (
-        _ulm_viterbi_pieces,
-        _ulm_viterbi_udf,
-    )
+    from csv_to_parquet_spark.operators.textops import _ulm_viterbi_pieces
 
     cost = {"a": 1000, "b": 1000, "ab": 900}
     wdf = spark.createDataFrame([(None,), ("ab",)], "w STRING")
-    for seg in (_ulm_viterbi_udf(cost), lambda w: _ulm_viterbi_pieces(w, cost)):
-        rows = wdf.select("w", seg(F.col("w")).alias("ps")).collect()
-        assert {r.w: r.ps for r in rows} == {None: None, "ab": ["ab"]}
-
-
-def test_unigram_kernel_gate_reads_footer(sf_smoke, monkeypatch):
-    """The gate is decided from the documents parquet footer with no
-    Spark job: every driver fixture sits far below the threshold (the
-    fold path — where the kernel measurably loses), a lowered
-    threshold flips it, and unreadable paths fall back to the fold."""
-    from csv_to_parquet_spark.operators import textops as t
-
-    assert t._ulm_use_kernel(sf_smoke) is False
-    monkeypatch.setattr(t, "_ULM_KERNEL_MIN_DOCS", 10)
-    assert t._ulm_use_kernel(sf_smoke) is True
-    assert t._ulm_use_kernel("/nonexistent") is False
+    rows = wdf.select(
+        "w", _ulm_viterbi_pieces(F.col("w"), cost).alias("ps")
+    ).collect()
+    assert {r.w: r.ps for r in rows} == {None: None, "ab": ["ab"]}
 
 
 def test_drift_index_is_additions_only():
