@@ -5,7 +5,7 @@ onto Spark:
 
   discover inputs (S1)  → file / dir glob *.csv
   pass 1 (I1)           → sample-N inference, exact lattice (inference.py):
-                          one grouped sample job per convert_all call
+                          one shuffle-free sample job per convert_all call
   header cleaning (P1)  → clean_headers (headers.py)
   pass 2 (T1/T2/F1/K1)  → all-string scan → try_cast projection → parquet
   verify (V1)           → output non-empty and its parquet footers
@@ -17,12 +17,13 @@ Like the reference, each file gets its OWN schema, inferred from its
 own first rows (converter/converter.go:133), and its full body is read
 once, by the typed pass (:328). Unlike the reference, which samples
 each file in its own pass, ``convert_all`` reads every file's header
-and sample prefix on the driver (serially; O(sample) each), then votes
-all of them in ONE Spark job grouped by file before any write starts
-(``infer_file_schemas``). Files then convert concurrently — the
-reference caps 4 goroutines (converter/converter.go:91); we submit up
-to 4 concurrent Spark *jobs* from a thread pool, and Spark additionally
-parallelizes each job across all cores/executors by file splits. At
+and sample prefix on the driver (serially; O(sample) each), then
+classifies all of them in ONE single-stage Spark job tagged by file
+before any write starts (``infer_file_schemas``). Files then convert
+concurrently — the reference caps 4 goroutines
+(converter/converter.go:91); we submit up to 4 concurrent Spark *jobs*
+from a thread pool, and Spark additionally parallelizes each job
+across all cores/executors by file splits. At
 cluster scale a single huge CSV still converts as a zero-shuffle
 scan→project→write pipelined across executors, O(partition) memory.
 """
@@ -190,7 +191,7 @@ def infer_file_schemas(
     charset: str = "UTF-8",
 ) -> dict[str, list[InferredColumn] | Exception]:
     """Pass 1: sample-bounded exact-lattice inference (converter.go:185-239)
-    of a batch of files in ONE Spark job (two under AQE).
+    of a batch of files in ONE Spark job: one stage, no shuffle.
 
     Each file's sample is its first ``sample_rows`` records read
     DRIVER-SIDE and parsed through the SAME Spark CSV reader as the full
@@ -203,13 +204,14 @@ def infer_file_schemas(
 
     Every prefix is staged as its own file in one temp directory, read
     by ONE raw scan at the widest file's column count W with each row
-    tagged by its source file, and voted by one aggregation grouped by
-    file. That equals inferring each file alone: a file with n < W
-    columns reads its first n columns with the same tokenisation as a
-    read at width n (a short row still pads with NULL; extra cells land
-    in columns ≥ n, which that file ignores), and a file whose sample
-    has no data row is absent from the grouped result, so its columns
-    take the empty-sample kind.
+    tagged by its source file, and classified by one projection whose
+    class bits the driver sums per file. That equals inferring each
+    file alone: a file with n < W columns reads its first n columns
+    with the same tokenisation as a read at width n (a short row still
+    pads with NULL; extra cells land in columns ≥ n, which that file
+    ignores), and a file whose sample
+    has no data row is absent from the result, so its columns take the
+    empty-sample kind.
 
     Returns, per path, the file's columns or the exception it raised. A
     failure reading one file's header or prefix is that file's alone; if
@@ -283,7 +285,7 @@ def _scan_samples(
 ) -> dict[str, dict[str, str]]:
     """The shared sample job: one raw scan of the staged prefixes in
     directory ``stage`` (file name → source path in ``staged``) at
-    ``width`` columns, grouped by file → {source path: {raw column: kind}}.
+    ``width`` columns, tagged by file → {source path: {raw column: kind}}.
     The staging is a local directory, NOT sc.parallelize(lines): a
     Python-RDD-backed CSV scan routes every action through a Python
     worker round trip (measured ~0.7 s per inference at sf0.1); the
@@ -373,11 +375,15 @@ def convert_file(
         os.makedirs(os.path.dirname(out) or ".", exist_ok=True)
         writer = typed.coalesce(1) if single_file else typed
         target = out + "._spark_tmp" if single_file else out
-        (
-            writer.write.mode("overwrite")
-            .option("parquet.block.size", ROW_GROUP_BYTES)
-            .parquet(target)
+        write = writer.write.mode("overwrite").option(
+            "parquet.block.size", ROW_GROUP_BYTES
         )
+        if single_file:
+            # the promote discards the temp dir's _SUCCESS marker; not
+            # writing it saves the committer's forked chmod calls
+            # (RawLocalFileSystem.setPermission without native IO)
+            write = write.option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+        write.parquet(target)
         if single_file:
             _single_file_output(target, out)
 

@@ -14,11 +14,13 @@ lattice, starting optimistically at INT64:
 - lattice: string ⊤; int+float→float; bool+number→string — :282-303
 - all-empty column stays INT64 (all NULL) — :214-217
 
-Spark realization: read the sample all-string, run ONE aggregation pass
-computing per-column try_cast success counts, then decide each column's
-type from the counts. The count formulation is equivalent to the
-pairwise fold because the lattice is a join-semilattice and inference
-classes (bool / int / float-not-int / other) are disjoint:
+Spark realization: read the sample all-string, run ONE narrow
+projection that gives every sample cell its class bits (non-empty,
+bool, int, float, and date/timestamp in enhanced mode), sum the bits
+per column on the driver, then decide each column's type from the
+counts. The count formulation is equivalent to the pairwise fold
+because the lattice is a join-semilattice and inference classes
+(bool / int / float-not-int / other) are disjoint:
 
   all bool            → BOOLEAN
   all int             → INT64   (also the empty-sample default)
@@ -28,9 +30,15 @@ classes (bool / int / float-not-int / other) are disjoint:
 At scale this is O(files × sample) work, independent of file size:
 the converter stages each file's first n+1 physical lines as a tiny
 local file (converter.py ``infer_file_schemas`` — a ``limit(n)`` over
-the full scan would plan a LocalLimit into EVERY split) and votes all
-of a batch's samples in ONE aggregation grouped by source file, so a
-directory of any number of files costs one Spark job (two under AQE).
+the full scan would plan a LocalLimit into EVERY split) and classifies
+all of a batch's samples in ONE projection tagged by source file, so a
+directory of any number of files costs one Spark job with one stage
+and no shuffle. Spark still parses every cell and evaluates every
+``try_cast``; the driver only adds up bits for the rows it staged.
+
+The bool test folds case with ``translate``, not ``lower()``, which
+would load ICU's case-mapping tables in every cold run (see
+:func:`bool_folded`).
 
 Enhanced (non-parity) mode also probes the reference's six date/time
 layouts (converter/converter.go:264-271) and, when every non-empty
@@ -40,6 +48,7 @@ demoting to string.
 
 from __future__ import annotations
 
+from collections import Counter
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -89,70 +98,99 @@ class InferredColumn:
 EMPTY_SAMPLE_KIND = "int64"
 
 
-def infer_column_kinds(
+def bool_folded(v: str) -> str:
+    """SQL text folding the case of the letters of ``true``/``false``
+    in the SQL expression ``v``: ``bool_folded(v)`` is ``'true'`` iff
+    ``lower(v)`` is, and likewise ``'false'`` — the reference's
+    case-insensitive bool literal (converter.go:248-251).
+
+    ``translate`` keeps the conversion path off ICU. With
+    ``spark.sql.icu.caseMappings.enabled`` (Spark 4's default) the
+    first ``lower()`` in a JVM costs ~3 s of CPU to load ICU's
+    case-mapping tables, a cost every cold CLI run would pay. The fold
+    is exact: no character outside ASCII ``TRUEFALStruefals`` lowercases
+    to any of ``t r u e f a l s`` (``İ``, the Kelvin sign, ``ſ`` and
+    the fullwidth letters do not), so both sides agree on every string.
+    """
+    return f"translate({v}, 'TRUEFALS', 'truefals')"
+
+
+#: bit of each cell class in :func:`class_codes`, keyed like the counts
+#: ``c{idx}_{key}`` that :func:`_column_kind` reads
+CLASS_BITS = {"n": 1, "b": 2, "i": 4, "f": 8, "d": 16, "t": 32}
+
+
+def class_codes(
     sample: DataFrame, group: str, enhanced_dates: bool = False
-) -> dict[str, dict[str, str]]:
-    """One aggregation pass over an all-string sample → column kinds of
-    each source.
+) -> DataFrame:
+    """The inference projection: per sample row, its ``group`` tag and
+    ``codes``, the comma-separated class bits of every other column
+    (:data:`CLASS_BITS`; ``d``/``t`` only in enhanced mode).
 
-    ``group`` names the column of ``sample`` that tags each row with its
-    source (a file); the pass is ONE ``groupBy(group)`` aggregation over
-    the other columns → ``{group value: {column: kind}}``. A source with
-    no rows is absent; its columns take :data:`EMPTY_SAMPLE_KIND`.
-
-    The whole vote matrix is ONE SQL ``struct(...)`` expression built
-    as a string: per-column Column construction (4-6 expressions × N
-    columns, each a handful of py4j round trips) measured ~0.5 s of
-    pure driver-side chatter per file at 16 columns — a single
-    ``F.expr`` ships the same plan in one call. Semantics per cell,
-    unchanged: the reference skips only truly EMPTY cells
-    (converter.go:231-233); a whitespace-only cell trims to "" inside
-    inferType and votes string — it counts toward n but matches no
-    type class.
+    The whole projection is ONE SQL expression built as a string:
+    per-column Column construction (4-6 expressions × N columns, each
+    a handful of py4j round trips) measured ~0.5 s of pure driver-side
+    chatter per file at 16 columns — a single ``F.expr`` ships the same
+    plan in one call. Semantics per cell: the reference skips only
+    truly EMPTY cells (converter.go:231-233); a whitespace-only cell
+    trims to "" inside inferType and votes string — it sets ``n`` but
+    matches no type class.
     """
 
-    def cnt(cond: str, alias: str) -> str:
-        return f"count(CASE WHEN {cond} THEN 1 END) AS {alias}"
+    def q(p: str) -> str:  # SQL string literal, '' escaping
+        return "'" + p.replace("'", "''") + "'"
 
-    columns = [c for c in sample.columns if c != group]
-    parts = []
-    for idx, name in enumerate(columns):
+    codes = []
+    for name in (c for c in sample.columns if c != group):
         raw = f"`{name}`"
         v = f"trim({raw})"
         ne = f"({raw} IS NOT NULL AND {raw} != '')"
         cls = f"({ne} AND {v} != '')"
-        parts.append(cnt(ne, f"c{idx}_n"))
-        parts.append(
-            cnt(f"{cls} AND lower({v}) IN ('true', 'false')", f"c{idx}_b")
-        )
-        parts.append(
-            cnt(f"{cls} AND try_cast({v} AS BIGINT) IS NOT NULL", f"c{idx}_i")
-        )
-        parts.append(
-            cnt(f"{cls} AND try_cast({v} AS DOUBLE) IS NOT NULL", f"c{idx}_f")
-        )
+        probes = {
+            "n": ne,
+            "b": f"{cls} AND {bool_folded(v)} IN ('true', 'false')",
+            "i": f"{cls} AND try_cast({v} AS BIGINT) IS NOT NULL",
+            "f": f"{cls} AND try_cast({v} AS DOUBLE) IS NOT NULL",
+        }
         if enhanced_dates:
             # the 6-layout probes are only consulted in enhanced mode;
             # in parity mode dates demote to string anyway
             # (converter.go:272-275)
-            def q(p: str) -> str:  # SQL string literal, '' escaping
-                return "'" + p.replace("'", "''") + "'"
+            for key, patterns in (("d", DATE_PATTERNS), ("t", TIMESTAMP_PATTERNS)):
+                probe = ", ".join(f"try_to_timestamp({v}, {q(p)})" for p in patterns)
+                probes[key] = f"{cls} AND coalesce({probe}) IS NOT NULL"
+        code = " + ".join(
+            f"CASE WHEN {cond} THEN {CLASS_BITS[key]} ELSE 0 END"
+            for key, cond in probes.items()
+        )
+        codes.append(f"CAST({code} AS STRING)")
+    codes_sql = f"concat_ws(',', {', '.join(codes)})"
+    return sample.select(F.col(group), F.expr(codes_sql).alias("codes"))
 
-            date_probe = "coalesce(" + ", ".join(
-                f"try_to_timestamp({v}, {q(p)})" for p in DATE_PATTERNS
-            ) + ") IS NOT NULL"
-            ts_probe = "coalesce(" + ", ".join(
-                f"try_to_timestamp({v}, {q(p)})" for p in TIMESTAMP_PATTERNS
-            ) + ") IS NOT NULL"
-            parts.append(cnt(f"{cls} AND {date_probe}", f"c{idx}_d"))
-            parts.append(cnt(f"{cls} AND {ts_probe}", f"c{idx}_t"))
-    votes = F.expr(f"struct({', '.join(parts)})").alias("s")
+
+def infer_column_kinds(
+    sample: DataFrame, group: str, enhanced_dates: bool = False
+) -> dict[str, dict[str, str]]:
+    """Column kinds of each source of an all-string sample, from ONE
+    narrow Spark projection (:func:`class_codes`).
+
+    ``group`` names the column of ``sample`` that tags each row with its
+    source (a file) → ``{group value: {column: kind}}``. A source with
+    no rows is absent; its columns take :data:`EMPTY_SAMPLE_KIND`.
+
+    The driver collects one short string per sample row and sums each
+    column's class bits per source into the counts ``c{idx}_{key}``.
+    No aggregation runs in Spark, so the pass needs no shuffle.
+    """
+    columns = [c for c in sample.columns if c != group]
+    votes: dict[str, Counter] = {}
+    for r in class_codes(sample, group, enhanced_dates).collect():
+        counts = votes.setdefault(r[group], Counter())
+        for idx, code in enumerate(map(int, r["codes"].split(","))):
+            counts.update(f"c{idx}_{k}" for k, bit in CLASS_BITS.items() if code & bit)
     return {
-        r[group]: {
-            name: _column_kind(r["s"], idx, enhanced_dates)
-            for idx, name in enumerate(columns)
-        }
-        for r in sample.groupBy(group).agg(votes).collect()
+        g: {name: _column_kind(v, idx, enhanced_dates) for idx, name in enumerate(columns)}
+        for g, v in votes.items()
     }
 
 
@@ -185,9 +223,8 @@ def cast_column(kind: str, name: str) -> F.Column:
     if kind == "float64":
         return v.try_cast("double")
     if kind == "bool":
-        return F.when(F.lower(v) == "true", F.lit(True)).when(
-            F.lower(v) == "false", F.lit(False)
-        )
+        b = F.expr(bool_folded(f"trim(`{name}`)"))
+        return F.when(b == "true", F.lit(True)).when(b == "false", F.lit(False))
     if kind == "date":
         return F.coalesce(*[F.try_to_timestamp(v, F.lit(p)) for p in DATE_PATTERNS]).cast(
             "date"

@@ -190,6 +190,22 @@ def _lsh_quant(arr):
     return quant_micro(arr)
 
 
+def _per_vector(emb: pd.Series, kernel) -> pd.Series:
+    """Run the batch ``kernel`` ((n, d) float64 matrix → n results) of
+    an embedding pandas UDF over the batch's non-NULL vectors. A NULL
+    embedding maps to NULL, as the JVM array path does, and leaves the
+    other rows' results unchanged."""
+    import numpy as np
+
+    keep = np.flatnonzero(emb.notna().to_numpy())
+    out = [None] * len(emb)
+    if len(keep):
+        vecs = np.stack([np.asarray(x, dtype=np.float64) for x in emb.values[keep]])
+        for i, r in zip(keep, kernel(vecs)):
+            out[i] = r
+    return pd.Series(out)
+
+
 def _table_buckets(vec: Column) -> Column:
     """array of L bucket ids (index = table) for an embedding column.
 
@@ -207,14 +223,14 @@ def _table_buckets(vec: Column) -> Column:
     planes = _PLANES_INT.astype(np.float64)
     weights = (1 << np.arange(_K_BITS, dtype=np.int64))
 
+    def buckets(vecs):
+        v = _lsh_quant(vecs).astype(np.float64)
+        bits = (v @ planes.T >= 0).astype(np.int64)  # (n, L*k)
+        return bits.reshape(len(v), _N_TABLES, _K_BITS) @ weights  # (n, L)
+
     @pandas_udf("array<bigint>")
     def buckets_udf(emb: pd.Series) -> pd.Series:
-        v = _lsh_quant(
-            np.stack([np.asarray(x, dtype=np.float64) for x in emb.values])
-        ).astype(np.float64)
-        bits = (v @ planes.T >= 0).astype(np.int64)  # (n, L*k)
-        b = bits.reshape(len(v), _N_TABLES, _K_BITS) @ weights  # (n, L)
-        return pd.Series(list(b))
+        return _per_vector(emb, buckets)
 
     return buckets_udf(vec)
 
@@ -265,11 +281,8 @@ def _query_probes(vec: Column) -> Column:
     planes = _PLANES_INT.astype(np.float64)
     weights = 1 << np.arange(_K_BITS, dtype=np.int64)
 
-    @pandas_udf("array<array<bigint>>")
-    def probes_udf(emb: pd.Series) -> pd.Series:
-        v = _lsh_quant(
-            np.stack([np.asarray(x, dtype=np.float64) for x in emb.values])
-        ).astype(np.float64)
+    def probes(vecs):
+        v = _lsh_quant(vecs).astype(np.float64)
         proj = v @ planes.T  # (n, L*k) — exact integer-valued
         bits = (proj >= 0).astype(np.int64)
         buckets = bits.reshape(len(v), _N_TABLES, _K_BITS) @ weights
@@ -288,7 +301,11 @@ def _query_probes(vec: Column) -> Column:
                     [base ^ mask for _, mask in scored[:_T_PROBES]]
                 )
             out.append(tables)
-        return pd.Series(out)
+        return out
+
+    @pandas_udf("array<array<bigint>>")
+    def probes_udf(emb: pd.Series) -> pd.Series:
+        return _per_vector(emb, probes)
 
     return probes_udf(vec)
 
@@ -550,16 +567,13 @@ def _ivf_cells_int(vec: Column, C, n: int) -> Column:
     Ci = np.asarray(C, dtype=np.int64)
     cn2 = (Ci * Ci).sum(axis=1)
 
+    def cells(vecs):
+        score = cn2[None, :] - 2 * (_ivf_quant(vecs) @ Ci.T)  # row-const |x|² dropped
+        return np.argsort(score, axis=1, kind="stable")[:, :n].astype(np.int32)
+
     @pandas_udf("array<int>")
     def cells_udf(emb: pd.Series) -> pd.Series:
-        v = _ivf_quant(
-            np.stack([np.asarray(x, dtype=np.float64) for x in emb.values])
-        )
-        score = cn2[None, :] - 2 * (v @ Ci.T)  # row-const |x|² dropped
-        order = np.argsort(score, axis=1, kind="stable")[:, :n].astype(
-            np.int32
-        )
-        return pd.Series(list(order))
+        return _per_vector(emb, cells)
 
     return cells_udf(vec)
 

@@ -8,6 +8,7 @@ schema + values via spark.read.parquet.
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 
@@ -18,7 +19,12 @@ from csv_to_parquet_spark.convert.converter import (
     infer_file_schema,
     infer_file_schemas,
 )
-from csv_to_parquet_spark.convert.inference import format_schema
+from csv_to_parquet_spark.convert.inference import (
+    bool_folded,
+    cast_column,
+    class_codes,
+    format_schema,
+)
 
 
 def _write(tmp_path, name: str, content: bytes | str) -> str:
@@ -451,7 +457,7 @@ def test_convert_all_infers_in_one_job(spark, tmp_path, monkeypatch):
     assert summary.converted == n
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert len(jobs) <= n + 2, jobs  # one write each plus the shared sample
+    assert len(jobs) <= n + 1, jobs  # one write each plus the shared sample
 
 
 def test_rows_from_the_written_footers(spark, tmp_path):
@@ -477,3 +483,148 @@ def test_unreadable_footer_fails_and_keeps_the_source(spark, tmp_path, monkeypat
     assert os.path.exists(src)
     assert not os.path.exists(res.output)
     assert not os.path.exists(res.output + "._spark_tmp")
+
+
+def test_single_file_write_skips_the_success_marker(spark, tmp_path, monkeypatch):
+    """The promote discards the temp dir's _SUCCESS, so a single-file
+    write does not commit one; a directory output still has it."""
+    seen = []
+    promote = conv._single_file_output
+
+    def spy(tmp_dir, final_path):
+        seen.append(sorted(os.listdir(tmp_dir)))
+        return promote(tmp_dir, final_path)
+
+    monkeypatch.setattr(conv, "_single_file_output", spy)
+    src = _write(tmp_path, "marker.csv", "a\n1\n")
+    assert convert_file(spark, src, str(tmp_path / "one")).ok
+    (listing,) = seen
+    assert [n for n in listing if "_SUCCESS" in n] == []
+    assert len([n for n in listing if n.startswith("part-")]) == 1
+    parts = convert_file(spark, src, str(tmp_path / "parts"), single_file=False)
+    assert parts.ok and os.path.isfile(os.path.join(parts.output, "_SUCCESS"))
+
+
+# ---------------------------------------------------------------------------
+# The inference pass: one narrow projection, no ICU case mapping, no shuffle.
+# ---------------------------------------------------------------------------
+
+
+def test_bool_fold_equals_lower_on_every_bmp_code_point(spark):
+    """``bool_folded`` reads 'true'/'false' exactly where ``lower()``
+    does: every BMP code point (surrogates aside) alone and in place of
+    each letter of "true" and "false", and a list of case-mapping traps."""
+    chars = (
+        spark.range(0x10000)
+        .where("id < 55296 OR id > 57343")  # no lone surrogates
+        .selectExpr("decode(unhex(lpad(hex(id), 4, '0')), 'UTF-16BE') AS c")
+    )
+    words = [
+        f"concat(substr('{w}', 1, {p}), c, substr('{w}', {p + 2}))"
+        for w in ("true", "false")
+        for p in range(len(w))
+    ]
+    cells = chars.selectExpr(f"explode(array(c, {', '.join(words)})) AS w")
+
+    def literal(folded: str) -> str:
+        return f"CASE {folded} WHEN 'true' THEN 1 WHEN 'false' THEN 0 END"
+
+    cmp = cells.selectExpr(
+        f"{literal('lower(trim(w))')} AS by_lower",
+        f"{literal(bool_folded('trim(w)'))} AS by_translate",
+    )
+    (r,) = cmp.selectExpr(
+        "count(*) AS n",
+        "count_if(NOT (by_lower <=> by_translate)) AS differ",
+        "count(by_lower) AS literals",
+    ).collect()
+    assert (r.n, r.differ) == ((0x10000 - 2048) * 10, 0)
+    assert r.literals == 2 * (4 + 5)  # each letter, either case
+
+    traps = [
+        "TRUE", "tRuE", "FaLsE", " True ", "İ", "ＴＲＵＥ",
+        "falſe", "\u212a", "tru\u212a", "\u212aTRUE", "",
+    ]
+    tf = spark.createDataFrame(list(enumerate(traps)), "i INT, w STRING")
+    got = tf.orderBy("i").selectExpr(
+        f"{literal('lower(trim(w))')} AS by_lower",
+        f"{literal(bool_folded('trim(w)'))} AS by_translate",
+    )
+    assert [tuple(r) for r in got.collect()] == (
+        [(1, 1), (1, 1), (0, 0), (1, 1)] + [(None, None)] * 7
+    )
+
+
+def test_mixed_case_and_padded_bools_keep_their_kinds_and_values(spark, tmp_path):
+    """Mixed-case and padded literals type bool and write their values;
+    case-mapping look-alikes (fullwidth, dotted İ, long s, the Kelvin
+    sign) vote string in the sample and write NULL after it."""
+    body = (
+        "a,b,c,d,e\n"
+        "TRUE,  tRuE  ,True,ＴＲＵＥ,false\n"
+        'false," FaLsE ",FALSE,true,TRUE\n'
+        "tRUe,,  false,fAlSe,False\n"
+        "FALSE,true,falſe,true,\u212aTRUE\n"
+        "True,False, TRUE ,İ, fAlSe \n"
+    )
+    src = _write(tmp_path, "mixed_bools.csv", body)
+    assert _schema_of(spark, src, sample_rows=3) == (
+        "a:BOOLEAN, b:BOOLEAN, c:BOOLEAN, d:UTF8, e:BOOLEAN"
+    )
+    res = convert_file(spark, src, str(tmp_path / "out"), sample_rows=3)
+    assert res.ok, res.error
+    assert [tuple(r) for r in spark.read.parquet(res.output).collect()] == [
+        (True, True, True, "ＴＲＵＥ", False),
+        (False, False, False, "true", True),
+        (True, None, False, "fAlSe", False),
+        (False, True, None, "true", None),
+        (True, False, True, "İ", False),
+    ]
+
+
+def test_sample_inference_is_one_shuffle_free_stage(spark, tmp_path):
+    d = tmp_path / "batch"
+    d.mkdir()
+    paths = [
+        _write(d, "a.csv", "x,y\n1,true\n2,FALSE\n"),
+        _write(d, "b.csv", "p\n1.5\n"),
+        _write(d, "c.csv", "q,r,s\nz,2,\n"),
+    ]
+    sc = spark.sparkContext
+    group = f"infer-{os.getpid()}-{id(tmp_path)}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        got = infer_file_schemas(spark, paths)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert [format_schema(got[p]) for p in paths] == [
+        "x:INT64, y:BOOLEAN",
+        "p:DOUBLE",
+        "q:UTF8, r:INT64, s:INT64",
+    ]
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    (job,) = tracker.getJobIdsForGroup(group)
+    (stage,) = tracker.getJobInfo(job).stageIds
+    sd = sc._jsc.sc().statusStore().lastStageAttempt(stage)
+    assert (sd.shuffleWriteBytes(), sd.shuffleReadBytes()) == (0, 0)
+
+
+_CASE_MAPPING = re.compile(r"\b(lower|upper|lcase|ucase|initcap|ilike)\(", re.I)
+
+
+@pytest.mark.parametrize("enhanced", [False, True])
+def test_inference_and_casts_never_map_case(spark, enhanced):
+    """A case-mapping call would load ICU's tables in every cold run:
+    neither the inference projection nor any kind's cast holds one."""
+    sample = spark.createDataFrame(
+        [("f", "x", " y ")], "_file STRING, _raw0 STRING, _raw1 STRING"
+    )
+    kinds = ["int64", "float64", "bool", "string", "date", "timestamp"]
+    frames = [
+        class_codes(sample, "_file", enhanced),
+        sample.select(*[cast_column(k, "_raw0").alias(k) for k in kinds]),
+    ]
+    for df in frames:
+        plan = df._jdf.queryExecution().analyzed().toString()
+        assert "_raw0" in plan and _CASE_MAPPING.findall(plan) == []

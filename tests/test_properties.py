@@ -47,7 +47,8 @@ def test_clean_headers_positional_fallbacks(hs):
 
 
 # ---------------------------------------------------------------------------
-# Lattice decision properties (mirrors infer_column_kinds' count logic)
+# Lattice decision properties (mirrors _column_kind's decision over the
+# per-column class counts that infer_column_kinds sums)
 # ---------------------------------------------------------------------------
 
 _INT = st.integers(min_value=-(2**62), max_value=2**62).map(str)

@@ -10,6 +10,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 
 def test_drift_index_median_semantics():
     import bench
@@ -142,3 +144,32 @@ def test_simhash_null_text_is_null(spark, monkeypatch):
     monkeypatch.setattr(d, "_docs", lambda spark, sf_dir: alone)
     (want,) = d.dedup_simhash_signatures(spark, "").collect()
     assert got == {1: None, 2: want.simhash} and want.simhash is not None
+
+
+@pytest.mark.parametrize("udf", ["_table_buckets", "_query_probes", "_ivf_cells_int"])
+def test_similarity_udf_null_embedding_is_null(spark, udf):
+    """A NULL embedding maps to NULL in the LSH bucket, LSH probe and
+    IVF cell Arrow UDFs, as the JVM array path does, instead of failing
+    the batch, and the vector sharing its batch gets its lone result."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from csv_to_parquet_spark.operators import similarity as sim
+
+    rng = np.random.default_rng(13)
+    vec = [float(x) for x in rng.normal(size=64)]
+    cents = rng.integers(-(10**6), 10**6, size=(16, 64))
+    build = {
+        "_table_buckets": sim._table_buckets,
+        "_query_probes": sim._query_probes,
+        "_ivf_cells_int": lambda col: sim._ivf_cells_int(col, cents, 3),
+    }[udf]
+
+    def run(rows):
+        df = spark.createDataFrame(rows, "id INT, embedding ARRAY<DOUBLE>")
+        out = df.coalesce(1).select("id", build(F.col("embedding")).alias("out"))
+        return {r.id: r.out for r in out.collect()}
+
+    alone = run([(1, vec)])
+    assert alone[1] is not None
+    assert run([(1, vec), (2, None)]) == {1: alone[1], 2: None}
