@@ -7,7 +7,8 @@ onto Spark:
   pass 1 (I1)           → sample-N inference, exact lattice (inference.py):
                           one shuffle-free sample job per convert_all call
   header cleaning (P1)  → clean_headers (headers.py)
-  pass 2 (T1/T2/F1/K1)  → all-string scan → try_cast projection → parquet
+  pass 2 (T1/T2/F1/K1)  → all-string scan → try_cast projection → parquet:
+                          one write job per group of same-schema files
   verify (V1)           → output non-empty and its parquet footers
                           readable; Result.rows from the footers
   delete original (D1)  → optional, --keep inverts
@@ -26,6 +27,14 @@ from a thread pool, and Spark additionally parallelizes each job
 across all cores/executors by file splits. At
 cluster scale a single huge CSV still converts as a zero-shuffle
 scan→project→write pipelined across executors, O(partition) memory.
+
+With single-file output (the CLI default) files whose inferred schemas
+are equal, up to one scan split's worth of bytes, are written by ONE
+job per group: one scan of all of them, the same projection, and a
+write partitioned by file into one part file per source, in its input
+order and byte-for-byte what the file's own write produces. Each file
+still keeps its own schema and output; the per-file step then only
+promotes, verifies and deletes.
 """
 
 from __future__ import annotations
@@ -38,7 +47,9 @@ import shutil
 import tempfile
 import time
 from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
 from dataclasses import dataclass, field
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -110,7 +121,7 @@ def read_raw_header(
 
 def read_csv_raw(
     spark: SparkSession,
-    path: str,
+    path: str | list[str],
     delimiter: str,
     n_cols: int,
     charset: str = "UTF-8",
@@ -161,9 +172,12 @@ def read_csv_typed(
     column date/timestamp (converter.go:264-271).
     """
     raw = read_csv_raw(spark, path, delimiter, len(cols), charset)
-    return raw.select(
-        *[cast_column(c.kind, f"_raw{i}").alias(c.name) for i, c in enumerate(cols)]
-    )
+    return raw.select(*_typed_columns(cols))
+
+
+def _typed_columns(cols: list[InferredColumn]) -> list:
+    """The trim/try_cast projection of a raw scan's ``_raw<i>`` columns."""
+    return [cast_column(c.kind, f"_raw{i}").alias(c.name) for i, c in enumerate(cols)]
 
 
 def _head_lines(path: str, n: int, charset: str = "UTF-8") -> list[str]:
@@ -348,17 +362,26 @@ def convert_file(
     charset: str = "UTF-8",
     *,
     schema: list[InferredColumn] | Exception | None = None,
+    written: str | None = None,
 ) -> Result:
     """Convert one CSV file (reference convertFile, converter.go:116-182).
 
     ``schema`` is the file's entry of an :func:`infer_file_schemas`
     batch (columns, or the exception its inference raised, which fails
-    this file); None infers the file on its own."""
+    this file); None infers the file on its own. ``written`` is a
+    directory beside the output already holding this file's single
+    part file (a group write's partition directory, see
+    :func:`convert_all`): the call promotes it instead of writing.
+
+    On failure the output path is removed only if this call replaced
+    it, so a file that fails before its promote keeps the previous
+    output."""
     t0 = time.monotonic()
     res = Result(input=input_file)
+    out = output_path_for(input_file, output_dir)
+    promoted = False  # whether this call has replaced ``out``
     try:
         res.input_bytes = os.path.getsize(input_file)
-        out = output_path_for(input_file, output_dir)
         res.output = out
 
         cols = schema if schema is not None else infer_file_schema(
@@ -368,24 +391,26 @@ def convert_file(
             raise cols
         log.debug("schema for %s: %s", input_file, format_schema(cols))
 
-        typed = read_csv_typed(
-            spark, input_file, delimiter, cols, enhanced_dates, charset
-        )
-
-        os.makedirs(os.path.dirname(out) or ".", exist_ok=True)
-        writer = typed.coalesce(1) if single_file else typed
         target = out + "._spark_tmp" if single_file else out
-        write = writer.write.mode("overwrite").option(
-            "parquet.block.size", ROW_GROUP_BYTES
-        )
+        if written is None:
+            typed = read_csv_typed(
+                spark, input_file, delimiter, cols, enhanced_dates, charset
+            )
+            os.makedirs(os.path.dirname(out) or ".", exist_ok=True)
+            writer = typed.coalesce(1) if single_file else typed
+            write = writer.write.mode("overwrite").option(
+                "parquet.block.size", ROW_GROUP_BYTES
+            )
+            if single_file:
+                # the promote discards the temp dir's _SUCCESS marker; not
+                # writing it saves the committer's forked chmod calls
+                # (RawLocalFileSystem.setPermission without native IO)
+                write = write.option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+            promoted = not single_file  # an overwrite replaces the directory in place
+            write.parquet(target)
         if single_file:
-            # the promote discards the temp dir's _SUCCESS marker; not
-            # writing it saves the committer's forked chmod calls
-            # (RawLocalFileSystem.setPermission without native IO)
-            write = write.option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-        write.parquet(target)
-        if single_file:
-            _single_file_output(target, out)
+            _single_file_output(written or target, out)
+            promoted = True
 
         # V1: verify output exists and is non-empty (converter.go:161-166),
         # and that its parquet footers are readable: they give Result.rows
@@ -409,11 +434,131 @@ def convert_file(
                 log.warning("could not delete original %s: %s", input_file, e)
     except Exception as e:  # V2: partial-output cleanup (converter.go:153-158)
         res.error = str(e)
-        for p in (res.output, res.output + "._spark_tmp"):
-            if p and os.path.exists(p):
+        for p in [out + "._spark_tmp"] + ([out] if promoted else []):
+            if os.path.exists(p):
                 shutil.rmtree(p, ignore_errors=True) if os.path.isdir(p) else os.remove(p)
     res.seconds = time.monotonic() - t0
     return res
+
+
+def _schema_groups(
+    files: list[str],
+    schemas: dict[str, list[InferredColumn] | Exception],
+    max_bytes: int,
+    max_files: int,
+) -> list[list[str]]:
+    """Files to write together: same cleaned column names and kinds in
+    order, packed in file order into groups of at most ``max_bytes``
+    (``spark.sql.files.maxPartitionBytes``, one scan task's worth) and
+    ``max_files`` files, so a file larger than one split never joins a
+    group. Files that failed inference, have no columns or end up alone
+    are not in any group."""
+    by_schema: dict[tuple, list[str]] = {}
+    for f in files:
+        cols = schemas[f]
+        if isinstance(cols, Exception) or not cols:
+            continue
+        by_schema.setdefault(tuple((c.name, c.kind) for c in cols), []).append(f)
+    groups: list[list[str]] = []
+    for members in by_schema.values():
+        group: list[str] = []
+        size = 0
+        for f in members:
+            try:
+                n = os.path.getsize(f)
+            except OSError:  # convert_file reports it
+                continue
+            if n > max_bytes:
+                continue
+            if size + n > max_bytes or len(group) >= max_files:
+                groups.append(group)
+                group, size = [], 0
+            group.append(f)
+            size += n
+        groups.append(group)
+    return [g for g in groups if len(g) > 1]
+
+
+def _write_group(
+    spark: SparkSession,
+    members: list[str],
+    cols: list[InferredColumn],
+    target: str,
+    delimiter: str,
+    charset: str,
+) -> dict[str, str]:
+    """Write same-schema files in ONE Spark job: one raw scan of all of
+    them (``header`` drops each file's own header), the same typed
+    projection as :func:`read_csv_typed`, and a ``coalesce(1)`` write
+    partitioned by a small-integer file tag into ``target``. Each
+    member's rows land in its own part file, in input order, encoded as
+    the per-file write would encode them; the partition column is not
+    stored in the file. Returns member → its partition directory; a
+    member without one (no data rows) is absent."""
+    raw = read_csv_raw(spark, members, delimiter, len(cols), charset)
+    # Spark's file names are URI-escaped ('%' → %25, ' ' → %20): map
+    # them back through the scan's own file list
+    spark_name = {}
+    for uri in raw.inputFiles():
+        name = uri.rsplit("/", 1)[-1]
+        spark_name[unquote(name)] = name
+    keys = []
+    for i, f in enumerate(members):
+        name = spark_name.get(os.path.basename(f))
+        if name is not None:  # else its rows get no tag: it writes alone
+            keys += [F.lit(name), F.lit(i)]
+    taken = {c.name.lower() for c in cols}
+    tag = "file"
+    while tag in taken:
+        tag += "_"
+    typed = raw.select(
+        *_typed_columns(cols),
+        F.create_map(*keys)[F.col("_metadata.file_name")].alias(tag),
+    )
+    (
+        typed.coalesce(1)
+        .write.partitionBy(tag)
+        .option("parquet.block.size", ROW_GROUP_BYTES)
+        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+        .parquet(target)
+    )
+    parts = {f: os.path.join(target, f"{tag}={i}") for i, f in enumerate(members)}
+    return {f: d for f, d in parts.items() if os.path.isdir(d)}
+
+
+#: The session conf that lets a partitioned write keep one open writer
+#: per partition value instead of sorting its input by partition.
+_CONCURRENT_WRITERS = "spark.sql.maxConcurrentOutputFileWriters"
+
+
+@contextmanager
+def _group_staging(spark: SparkSession, out_dir: str, groups: list[list[str]]):
+    """A staging directory beside the outputs (same filesystem, so each
+    promote is one ``os.replace``), with the session's concurrent-writer
+    cap at least the largest group's size while the group writes run;
+    both undone on exit. Yields None, and changes nothing, when there
+    is no group or the directory cannot be made."""
+    if not groups:
+        yield None
+        return
+    try:
+        os.makedirs(out_dir, exist_ok=True)
+        stage = tempfile.mkdtemp(prefix="._spark_groups-", dir=out_dir)
+    except OSError as e:  # each file converts, and reports, alone
+        log.warning("cannot stage group writes in %s: %s", out_dir, e)
+        yield None
+        return
+    caller = spark.conf.get(_CONCURRENT_WRITERS, None)
+    largest = max(len(g) for g in groups)
+    spark.conf.set(_CONCURRENT_WRITERS, str(max(largest, int(caller or 0))))
+    try:
+        yield stage
+    finally:
+        if caller is None:
+            spark.conf.unset(_CONCURRENT_WRITERS)
+        else:
+            spark.conf.set(_CONCURRENT_WRITERS, caller)
+        shutil.rmtree(stage, ignore_errors=True)
 
 
 def convert_all(
@@ -429,9 +574,17 @@ def convert_all(
     charset: str = "UTF-8",
 ) -> Summary:
     """Convert a file or a directory of CSVs (reference ConvertAll,
-    converter.go:66-105): each file keeps its own inferred schema, all
-    of them inferred by one Spark job before any write starts, then up
-    to ``max_concurrent`` write jobs in flight."""
+    converter.go:66-105): each file keeps its own inferred schema and
+    output, all of them inferred by one Spark job before any write
+    starts, then up to ``max_concurrent`` write jobs in flight.
+
+    With ``single_file`` (the CLI default) files of the same schema are
+    written by one job per group (:func:`_schema_groups`,
+    :func:`_write_group`) into a staging directory beside the outputs;
+    then :func:`convert_file` promotes, verifies and (optionally)
+    deletes each file once, exactly as after its own write. A member
+    the group wrote no rows for converts alone, and if a group's job
+    raises, every member converts alone."""
     files = discover_inputs(input_path)
     summary = Summary()
     if not files:
@@ -440,23 +593,64 @@ def convert_all(
     schemas = infer_file_schemas(
         spark, files, delimiter, sample_rows, enhanced_dates, charset
     )
+    groups: list[list[str]] = []
+    if single_file:
+        max_bytes = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+        # parquet's memory manager reserves one row group per open
+        # writer in a pool of 95 % of the heap and shrinks EVERY open
+        # writer's row groups once the pool is over-committed: a group
+        # keeps one writer per file open, beside up to
+        # max_concurrent - 1 other writes
+        heap = spark._jvm.java.lang.Runtime.getRuntime().maxMemory()
+        max_files = int(0.95 * heap) // ROW_GROUP_BYTES - (max_concurrent - 1)
+        groups = _schema_groups(files, schemas, max_bytes, max_files)
+    grouped = {f for g in groups for f in g}
+    units = groups + [[f] for f in files if f not in grouped]
+    out_dir = os.path.dirname(output_path_for(files[0], output_dir)) or "."
 
-    def _one(f: str) -> Result:
-        return convert_file(
-            spark,
-            f,
-            output_dir,
-            delimiter,
-            sample_rows,
-            delete_original,
-            single_file,
-            enhanced_dates,
-            charset,
-            schema=schemas[f],
-        )
+    with _group_staging(spark, out_dir, groups) as stage:
 
-    with ThreadPoolExecutor(max_workers=max_concurrent) as pool:
-        results = list(pool.map(_one, files))
+        def _unit(i: int, members: list[str]) -> list[Result]:
+            written: dict[str, str] = {}
+            t0 = time.monotonic()
+            if stage is not None and len(members) > 1:
+                try:
+                    written = _write_group(
+                        spark,
+                        members,
+                        schemas[members[0]],
+                        os.path.join(stage, str(i)),
+                        delimiter,
+                        charset,
+                    )
+                except Exception as e:  # contained: each member writes alone
+                    log.warning("group write of %d files failed: %s", len(members), e)
+            write_s = time.monotonic() - t0
+            results = [
+                convert_file(
+                    spark,
+                    f,
+                    output_dir,
+                    delimiter,
+                    sample_rows,
+                    delete_original,
+                    single_file,
+                    enhanced_dates,
+                    charset,
+                    schema=schemas[f],
+                    written=written.get(f),
+                )
+                for f in members
+            ]
+            for r in results:  # a promoted file's time includes its group's write
+                if r.input in written:
+                    r.seconds += write_s
+            return results
+
+        with ThreadPoolExecutor(max_workers=max_concurrent) as pool:
+            done = list(pool.map(_unit, range(len(units)), units))
+    by_file = {r.input: r for rs in done for r in rs}
+    results = [by_file[f] for f in files]
 
     for r in results:  # A1 summary fold (main.go:35-59)
         summary.results.append(r)

@@ -215,3 +215,26 @@ def quant_micro(arr):
     return (np.sign(scaled) * np.floor(np.abs(scaled) + 0.5)).astype(
         np.int64
     )
+
+
+def per_vector(emb, kernel, fields: Sequence[str] = ()):
+    """Run the batch ``kernel`` ((n, d) float64 matrix → n results) of
+    an embedding pandas UDF over the batch's non-NULL vectors. A NULL
+    embedding maps to NULL, as the JVM array path does, and leaves the
+    other rows' results unchanged. With ``fields`` each result is a
+    tuple of a struct's fields and the return is a frame of them, every
+    field NULL for a NULL embedding."""
+    import numpy as np
+    import pandas as pd
+
+    keep = np.flatnonzero(emb.notna().to_numpy())
+    out = [None] * len(emb)
+    if len(keep):
+        vecs = np.stack([np.asarray(x, dtype=np.float64) for x in emb.values[keep]])
+        for i, r in zip(keep, kernel(vecs)):
+            out[i] = r
+    if fields:
+        return pd.DataFrame(
+            {f: [None if r is None else r[j] for r in out] for j, f in enumerate(fields)}
+        )
+    return pd.Series(out)

@@ -38,6 +38,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from csv_to_parquet_spark.functions import per_vector
 from csv_to_parquet_spark.operators import Catalog
 from csv_to_parquet_spark.operators.cache import persist_tracked
 from csv_to_parquet_spark.sources.tables import load_table
@@ -84,24 +85,25 @@ def _seq_dots_udf(mat: list[list[float]]):
     Why: the interpreted-HOF formulation pays ~1µs per element op —
     measured 8.2 s for 2000 rows x 48 planes at sf0.1 — while this
     single Arrow crossing with 64 fused vector ops is ~100x cheaper
-    and scales per-batch on executors.
+    and scales per-batch on executors. A NULL embedding gets NULL
+    fields, as the interpreted form returns NULL.
     """
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
     P = np.array(mat, dtype=np.float64).T  # (dim, n_targets)
 
-    @pandas_udf("struct<dots: array<double>, nv: double>")
-    def seq_dots(emb: pd.Series) -> pd.DataFrame:
-        if len(emb) == 0:
-            return pd.DataFrame({"dots": [], "nv": []})
-        v = np.vstack(emb.to_numpy()).astype(np.float64)  # (n, dim)
+    def dots(v):  # (n, dim) → n (dots, nv)
         acc = np.zeros((v.shape[0], P.shape[1]))
         nacc = np.zeros(v.shape[0])
         for d in range(P.shape[0]):
             acc += v[:, d : d + 1] * P[d]
             nacc += v[:, d] * v[:, d]
-        return pd.DataFrame({"dots": list(acc), "nv": np.sqrt(nacc)})
+        return zip(acc, np.sqrt(nacc))
+
+    @pandas_udf("struct<dots: array<double>, nv: double>")
+    def seq_dots(emb: pd.Series) -> pd.DataFrame:
+        return per_vector(emb, dots, ("dots", "nv"))
 
     return seq_dots
 
@@ -119,7 +121,8 @@ def _bucket_sig_udf(planes: list[list[list[float]]]):
     list_dot_product ≥ 0 banding bit-for-bit. Computing the bits here
     instead of in L·k JVM ``F.when`` columns (r4) cuts ~0.9 s of
     driver-side py4j plan construction per call at L=12, k=7 AND
-    shrinks the Arrow return payload from L·k doubles to L longs.
+    shrinks the Arrow return payload from L·k doubles to L longs. A
+    NULL embedding gets NULL fields.
     """
     import numpy as np
     from pyspark.sql.functions import pandas_udf
@@ -131,11 +134,7 @@ def _bucket_sig_udf(planes: list[list[list[float]]]):
     ).T  # (dim, L*k)
     W = 1 << np.arange(n_bits, dtype=np.int64)
 
-    @pandas_udf("struct<bs: array<bigint>, nv: double>")
-    def bucket_sig(emb: pd.Series) -> pd.DataFrame:
-        if len(emb) == 0:
-            return pd.DataFrame({"bs": [], "nv": []})
-        v = np.vstack(emb.to_numpy()).astype(np.float64)  # (n, dim)
+    def sigs(v):  # (n, dim) → n (bucket ids, nv)
         acc = np.zeros((v.shape[0], P.shape[1]))
         nacc = np.zeros(v.shape[0])
         for d in range(P.shape[0]):
@@ -143,7 +142,11 @@ def _bucket_sig_udf(planes: list[list[list[float]]]):
             nacc += v[:, d] * v[:, d]
         signs = (acc >= 0).reshape(v.shape[0], n_tables, n_bits)
         buckets = (signs * W).sum(axis=2)  # (n, L) int64
-        return pd.DataFrame({"bs": list(buckets), "nv": np.sqrt(nacc)})
+        return zip(buckets, np.sqrt(nacc))
+
+    @pandas_udf("struct<bs: array<bigint>, nv: double>")
+    def bucket_sig(emb: pd.Series) -> pd.DataFrame:
+        return per_vector(emb, sigs, ("bs", "nv"))
 
     return bucket_sig
 

@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from csv_to_parquet_spark.functions import dot_double, md5_60_sql
+from csv_to_parquet_spark.functions import dot_double, md5_60_sql, per_vector
 from csv_to_parquet_spark.operators import Catalog
 from csv_to_parquet_spark.sources.tables import load_table, spread
 
@@ -190,22 +190,6 @@ def _lsh_quant(arr):
     return quant_micro(arr)
 
 
-def _per_vector(emb: pd.Series, kernel) -> pd.Series:
-    """Run the batch ``kernel`` ((n, d) float64 matrix → n results) of
-    an embedding pandas UDF over the batch's non-NULL vectors. A NULL
-    embedding maps to NULL, as the JVM array path does, and leaves the
-    other rows' results unchanged."""
-    import numpy as np
-
-    keep = np.flatnonzero(emb.notna().to_numpy())
-    out = [None] * len(emb)
-    if len(keep):
-        vecs = np.stack([np.asarray(x, dtype=np.float64) for x in emb.values[keep]])
-        for i, r in zip(keep, kernel(vecs)):
-            out[i] = r
-    return pd.Series(out)
-
-
 def _table_buckets(vec: Column) -> Column:
     """array of L bucket ids (index = table) for an embedding column.
 
@@ -230,7 +214,7 @@ def _table_buckets(vec: Column) -> Column:
 
     @pandas_udf("array<bigint>")
     def buckets_udf(emb: pd.Series) -> pd.Series:
-        return _per_vector(emb, buckets)
+        return per_vector(emb, buckets)
 
     return buckets_udf(vec)
 
@@ -305,7 +289,7 @@ def _query_probes(vec: Column) -> Column:
 
     @pandas_udf("array<array<bigint>>")
     def probes_udf(emb: pd.Series) -> pd.Series:
-        return _per_vector(emb, probes)
+        return per_vector(emb, probes)
 
     return probes_udf(vec)
 
@@ -573,7 +557,7 @@ def _ivf_cells_int(vec: Column, C, n: int) -> Column:
 
     @pandas_udf("array<int>")
     def cells_udf(emb: pd.Series) -> pd.Series:
-        return _per_vector(emb, cells)
+        return per_vector(emb, cells)
 
     return cells_udf(vec)
 

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import os
 import re
+import uuid
 
 import pytest
 
@@ -433,6 +434,30 @@ def test_empty_and_bad_utf8_files_fail_alone(spark, tmp_path):
     assert os.listdir(tmp_path / "out") == ["ok.parquet"]
 
 
+def _group_jobs(spark, monkeypatch, run):
+    """``run()``'s result and the ids of the jobs it ran, pool threads
+    included."""
+    sc = spark.sparkContext
+    group = f"groups-{uuid.uuid4().hex}"
+
+    def tagged(fn):
+        def wrapper(*a, **kw):
+            sc.setLocalProperty("spark.jobGroup.id", group)
+            return fn(*a, **kw)
+
+        return wrapper
+
+    monkeypatch.setattr(conv, "convert_file", tagged(conv.convert_file))
+    monkeypatch.setattr(conv, "_write_group", tagged(conv._write_group))
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        out = run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_convert_all_infers_in_one_job(spark, tmp_path, monkeypatch):
     n = 6
     d = tmp_path / "batch"
@@ -440,23 +465,10 @@ def test_convert_all_infers_in_one_job(spark, tmp_path, monkeypatch):
     for i in range(n):
         cols = ",".join(f"c{j}" for j in range(i + 1))
         _write(d, f"f{i}.csv", cols + "\n" + ",".join(["1"] * (i + 1)) + "\n")
-    sc = spark.sparkContext
-    group = f"convert-all-{os.getpid()}-{id(tmp_path)}"
-    original = conv.convert_file
-
-    def grouped(*a, **kw):  # pool threads tag their own jobs
-        sc.setLocalProperty("spark.jobGroup.id", group)
-        return original(*a, **kw)
-
-    monkeypatch.setattr(conv, "convert_file", grouped)
-    sc.setLocalProperty("spark.jobGroup.id", group)
-    try:
-        summary = convert_all(spark, str(d), str(tmp_path / "out"))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    summary, jobs = _group_jobs(
+        spark, monkeypatch, lambda: convert_all(spark, str(d), str(tmp_path / "out"))
+    )
     assert summary.converted == n
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert len(jobs) <= n + 1, jobs  # one write each plus the shared sample
 
 
@@ -628,3 +640,272 @@ def test_inference_and_casts_never_map_case(spark, enhanced):
     for df in frames:
         plan = df._jdf.queryExecution().analyzed().toString()
         assert "_raw0" in plan and _CASE_MAPPING.findall(plan) == []
+
+
+# ---------------------------------------------------------------------------
+# A failed conversion keeps the previous output.
+# ---------------------------------------------------------------------------
+
+
+def _previous_outputs(out_dir, names):
+    out_dir.mkdir(exist_ok=True)
+    for n in names:
+        (out_dir / f"{n}.parquet").write_bytes(b"previous " + n.encode())
+
+
+def test_failed_inference_keeps_the_previous_output(spark, tmp_path):
+    src = _write(tmp_path, "a.csv", "x\n1\n")
+    out = tmp_path / "out"
+    _previous_outputs(out, ["a"])
+    res = convert_file(spark, src, str(out), schema=RuntimeError("stored"))
+    assert res.error == "stored"
+    assert (out / "a.parquet").read_bytes() == b"previous a"
+
+
+def _failing_promote(tmp_dir, final_path):
+    raise RuntimeError("planted promote failure")
+
+
+def test_failed_promote_through_convert_file_keeps_the_previous_output(
+    spark, tmp_path, monkeypatch
+):
+    src = _write(tmp_path, "a.csv", "x\n1\n")
+    out = tmp_path / "out"
+    _previous_outputs(out, ["a"])
+    monkeypatch.setattr(conv, "_single_file_output", _failing_promote)
+    res = convert_file(spark, src, str(out), delete_original=True)
+    assert res.error == "planted promote failure"
+    assert (out / "a.parquet").read_bytes() == b"previous a"
+    assert not os.path.exists(res.output + "._spark_tmp")
+    assert os.path.exists(src)
+
+
+def test_failed_promote_in_a_group_keeps_the_previous_outputs(
+    spark, tmp_path, monkeypatch
+):
+    d = tmp_path / "batch"
+    d.mkdir()
+    for n in ("a", "b"):
+        _write(d, f"{n}.csv", "x,y\n1,2\n3,4\n")
+    out = tmp_path / "out"
+    _previous_outputs(out, ["a", "b"])
+    written = _spy_group_writes(monkeypatch)
+    monkeypatch.setattr(conv, "_single_file_output", _failing_promote)
+    summary = convert_all(spark, str(d), str(out))
+    assert [sorted(w) for w in written] == [sorted(str(d / f) for f in ("a.csv", "b.csv"))]
+    assert summary.failed == 2
+    assert {r.error for r in summary.results} == {"planted promote failure"}
+    assert sorted(os.listdir(out)) == ["a.parquet", "b.parquet"]
+    assert (out / "a.parquet").read_bytes() == b"previous a"
+    assert (out / "b.parquet").read_bytes() == b"previous b"
+
+
+# ---------------------------------------------------------------------------
+# One write job per schema group: every output equals the per-file write.
+# ---------------------------------------------------------------------------
+
+
+def _spy_group_writes(monkeypatch, fail: bool = False) -> list[dict]:
+    """Record each group write's member → partition directory map (or
+    raise in its place)."""
+    seen: list[dict] = []
+    original = conv._write_group
+
+    def spy(spark_, members, *a):
+        if fail:
+            raise RuntimeError("planted group failure")
+        got = original(spark_, members, *a)
+        seen.append(got)
+        return got
+
+    monkeypatch.setattr(conv, "_write_group", spy)
+    return seen
+
+
+def _parquet_facts(path: str) -> dict:
+    """Rows, Arrow schema, Spark's row metadata and per-column non-NULL
+    counts of one parquet file."""
+    import pyarrow.parquet as pq
+
+    f = pq.ParquetFile(path)
+    md = f.metadata
+    non_null = {}
+    for j in range(md.num_columns):
+        nulls = sum(md.row_group(i).column(j).statistics.null_count for i in range(md.num_row_groups))
+        non_null[md.schema.column(j).name] = md.num_rows - nulls
+    schema = f.schema_arrow
+    return {
+        "rows": repr(f.read().to_pylist()),  # NaN unequal to itself
+        "schema": schema.remove_metadata(),
+        "row_metadata": schema.metadata[b"org.apache.spark.sql.parquet.row.metadata"],
+        "non_null": non_null,
+    }
+
+
+@pytest.mark.parametrize("enhanced", [False, True])
+def test_grouped_write_equals_per_file_write(spark, tmp_path, monkeypatch, enhanced):
+    d = tmp_path / "batch"
+    d.mkdir()
+    for name, (body, _) in _BATCH.items():
+        _write(d, name, body)
+        _write(d, "copy_" + name, body)
+    written = _spy_group_writes(monkeypatch)
+    summary = convert_all(spark, str(d), str(tmp_path / "grouped"), enhanced_dates=enhanced)
+    assert summary.failed == 0 and summary.converted == 2 * len(_BATCH)
+    promoted = {os.path.basename(f) for w in written for f in w}
+    # every pair was written by a group except the header-only one
+    assert promoted == {
+        p + n for n in _BATCH if n != "header_only.csv" for p in ("", "copy_")
+    }
+    for r in summary.results:
+        alone = convert_file(
+            spark, r.input, str(tmp_path / "alone"), enhanced_dates=enhanced
+        )
+        assert alone.ok and alone.rows == r.rows
+        assert _parquet_facts(r.output) == _parquet_facts(alone.output), r.input
+        with open(r.output, "rb") as g, open(alone.output, "rb") as a:
+            assert g.read() == a.read(), r.input
+    assert sorted(os.listdir(tmp_path / "grouped")) == sorted(
+        os.listdir(tmp_path / "alone")
+    )
+
+
+def test_grouped_write_keeps_row_order(spark, tmp_path, monkeypatch):
+    """Ids written ascending stay ascending, also when each file spans
+    several scan splits."""
+    import pyarrow.parquet as pq
+
+    d = tmp_path / "batch"
+    d.mkdir()
+    n = 12_000
+    for k in range(3):
+        rows = "".join(f"{i},{(i * 7919) % 1000},v{i % 13}\n" for i in range(k, k + n))
+        _write(d, f"f{k}.csv", "id,h,s\n" + rows)
+    written = _spy_group_writes(monkeypatch)
+    key = "spark.sql.files.openCostInBytes"
+    before = spark.conf.get(key, None)
+    spark.conf.set(key, str(64 * 1024))  # split each ~200 KB file
+    try:
+        summary = convert_all(spark, str(d), str(tmp_path / "out"))
+    finally:
+        spark.conf.unset(key) if before is None else spark.conf.set(key, before)
+    assert summary.failed == 0 and len(written) == 1 and len(written[0]) == 3
+    # each file's time includes the group write it shared
+    assert min(r.seconds for r in summary.results) > 0.05
+    for k, r in enumerate(sorted(summary.results, key=lambda r: r.input)):
+        ids = pq.read_table(r.output).column("id").to_pylist()
+        assert ids == list(range(k, k + n))
+
+
+def test_same_schema_files_write_in_one_job(spark, tmp_path, monkeypatch):
+    d = tmp_path / "batch"
+    d.mkdir()
+    k = 5
+    for i in range(k):
+        _write(d, f"f{i}.csv", "a,b,c\n" + f"{i},x{i},{i}.5\n" * (i + 1))
+    out = tmp_path / "out"
+    summary, jobs = _group_jobs(
+        spark, monkeypatch, lambda: convert_all(spark, str(d), str(out))
+    )
+    assert summary.converted == k
+    assert len(jobs) == 2, jobs  # the shared sample and the group write
+    assert sorted(os.listdir(out)) == [f"f{i}.parquet" for i in range(k)]
+    store = spark._jsparkSession.sharedState().statusStore()
+    last = store.executionsList(max(store.executionsCount() - 4, 0), 4)
+    plans = [last.apply(i).physicalPlanDescription() for i in range(last.size())]
+    (plan,) = [p for p in plans if f"{out}/._spark_groups-" in p]
+    assert "WriteFiles" in plan and "Coalesce" in plan
+    assert re.search(r"\bSort\b", plan) is None, plan
+
+
+def test_failed_group_write_converts_each_file_alone(spark, tmp_path, monkeypatch):
+    d = tmp_path / "batch"
+    d.mkdir()
+    for i in range(3):
+        _write(d, f"f{i}.csv", "a,b\n" + f"{i},{i}\n" * (i + 1))
+    _spy_group_writes(monkeypatch, fail=True)
+    out = tmp_path / "out"
+    summary = convert_all(spark, str(d), str(out))
+    assert summary.converted == 3 and summary.failed == 0
+    assert [r.rows for r in summary.results] == [1, 2, 3]
+    for i, r in enumerate(summary.results):
+        assert [tuple(x) for x in spark.read.parquet(r.output).collect()] == [(i, i)] * (i + 1)
+    assert sorted(os.listdir(out)) == ["f0.parquet", "f1.parquet", "f2.parquet"]
+
+
+def test_grouped_awkward_names_and_header_only_member(spark, tmp_path, monkeypatch):
+    names = ["a=b", "p%20q", "sp ace", "ünï", "plain"]
+    d = tmp_path / "batch"
+    d.mkdir()
+    for i, n in enumerate(names):
+        _write(d, f"{n}.csv", "id,v\n" + "".join(f"{i},{j}\n" for j in range(i + 1)))
+    _write(d, "hdr.csv", "id,v\n")
+    written = _spy_group_writes(monkeypatch)
+    out = tmp_path / "out"
+    summary = convert_all(spark, str(d), str(out), delete_original=True)
+    assert summary.failed == 0
+    (w,) = written
+    assert sorted(os.path.basename(f) for f in w) == sorted(f"{n}.csv" for n in names)
+    assert sorted(os.listdir(out)) == sorted(f"{n}.parquet" for n in names + ["hdr"])
+    for i, n in enumerate(names):
+        got = spark.read.parquet(str(out / f"{n}.parquet")).collect()
+        assert [tuple(r) for r in got] == [(i, j) for j in range(i + 1)]
+    hdr = spark.read.parquet(str(out / "hdr.parquet"))
+    assert hdr.count() == 0 and dict(hdr.dtypes) == {"id": "bigint", "v": "bigint"}
+    assert os.listdir(d) == []  # every source verified, then deleted
+
+
+@pytest.mark.parametrize("caller", [None, "2", "64"])
+def test_concurrent_writer_conf_is_scoped_to_the_group_writes(
+    spark, tmp_path, monkeypatch, caller
+):
+    key = "spark.sql.maxConcurrentOutputFileWriters"
+    d = tmp_path / "batch"
+    d.mkdir()
+    for i in range(3):
+        _write(d, f"f{i}.csv", f"a\n{i}\n")
+    during = []
+    original = conv._write_group
+
+    def spy(spark_, *a):
+        during.append(spark_.conf.get(key))
+        return original(spark_, *a)
+
+    monkeypatch.setattr(conv, "_write_group", spy)
+    if caller is not None:
+        spark.conf.set(key, caller)
+    try:
+        assert convert_all(spark, str(d), str(tmp_path / "out")).converted == 3
+        assert during == [str(max(3, int(caller or 0)))]
+        assert spark.conf.get(key, None) == caller
+        # also restored, and the staging gone, when the pool raises
+        def failing_convert(*a, **kw):
+            raise RuntimeError("planted convert failure")
+
+        monkeypatch.setattr(conv, "convert_file", failing_convert)
+        with pytest.raises(RuntimeError, match="planted convert failure"):
+            convert_all(spark, str(d), str(tmp_path / "out"))
+        assert spark.conf.get(key, None) == caller
+        assert sorted(os.listdir(tmp_path / "out")) == ["f0.parquet", "f1.parquet", "f2.parquet"]
+    finally:
+        spark.conf.unset(key)
+
+
+def test_schema_groups_cap_bytes_and_files(tmp_path):
+    from csv_to_parquet_spark.convert.converter import InferredColumn, _schema_groups
+
+    ab = [InferredColumn("a", "a", "int64"), InferredColumn("b", "b", "string")]
+    ba = [InferredColumn("a", "a", "string"), InferredColumn("b", "b", "int64")]
+    sizes = {"f0": 40, "f1": 40, "f2": 40, "f3": 101, "f4": 10, "g0": 5, "g1": 5, "h0": 5}
+    files = [_write(tmp_path, f"{n}.csv", b"x" * size) for n, size in sizes.items()]
+    schemas = dict(zip(files, [ab] * 5 + [ba, ba, RuntimeError("failed")]))
+    names = lambda groups: [[os.path.basename(f)[:2] for f in g] for g in groups]  # noqa: E731
+    # f3 is larger than one split; f0-f2 overflow the byte cap
+    assert names(_schema_groups(files, schemas, 100, 10)) == [
+        ["f0", "f1"], ["f2", "f4"], ["g0", "g1"],
+    ]
+    assert names(_schema_groups(files, schemas, 1000, 3)) == [
+        ["f0", "f1", "f2"], ["f3", "f4"], ["g0", "g1"],
+    ]
+    assert _schema_groups(files, schemas, 1000, 1) == []
+    assert _schema_groups(files, schemas, 1000, 0) == []

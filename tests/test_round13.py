@@ -173,3 +173,33 @@ def test_similarity_udf_null_embedding_is_null(spark, udf):
     alone = run([(1, vec)])
     assert alone[1] is not None
     assert run([(1, vec), (2, None)]) == {1: alone[1], 2: None}
+
+
+@pytest.mark.parametrize("udf", ["_seq_dots_udf", "_bucket_sig_udf"])
+def test_clustering_udf_null_embedding_is_null(spark, udf):
+    """A NULL embedding gets NULL struct fields from the clustering
+    dot-product and LSH-signature Arrow UDFs instead of failing the
+    batch, and the vector sharing its batch gets its lone result."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from csv_to_parquet_spark.operators import clustering as cl
+
+    rng = np.random.default_rng(17)
+    vec = [float(x) for x in rng.normal(size=8)]
+    planes = rng.normal(size=(3, 2, 8)).tolist()  # L=3 tables, k=2 bits
+    build = {
+        "_seq_dots_udf": lambda: cl._seq_dots_udf(planes[0]),
+        "_bucket_sig_udf": lambda: cl._bucket_sig_udf(planes),
+    }[udf]()
+
+    def run(rows):
+        df = spark.createDataFrame(rows, "id INT, embedding ARRAY<DOUBLE>")
+        out = df.coalesce(1).select("id", build(F.col("embedding")).alias("out"))
+        return {r.id: r.out.asDict() for r in out.collect()}
+
+    alone = run([(1, vec)])
+    assert None not in alone[1].values()
+    got = run([(1, vec), (2, None)])
+    assert got[1] == alone[1]
+    assert set(got[2].values()) == {None}
