@@ -152,7 +152,10 @@ def load_attempted() -> set[str]:
 
 def build_catalog() -> Catalog:
     # imports deferred so `import csv_to_parquet_spark` stays cheap
+    import importlib
+
     from csv_to_parquet_spark.operators import relational
+    from csv_to_parquet_spark.streaming import jobs as streaming_jobs
 
     merged = Catalog()
     merged.merge(relational.CAT)
@@ -179,20 +182,8 @@ def build_catalog() -> Catalog:
         "layout",
         "formats",
     ):
-        try:
-            import importlib
-
-            mod = importlib.import_module(f"csv_to_parquet_spark.operators.{modname}")
-            merged.merge(mod.CAT)
-        except ImportError:
-            pass  # module not built yet (round-incremental)
-
-    try:
-        from csv_to_parquet_spark.streaming import jobs as streaming_jobs
-
-        merged.merge(streaming_jobs.CAT)
-    except ImportError:
-        pass
+        merged.merge(importlib.import_module(f"csv_to_parquet_spark.operators.{modname}").CAT)
+    merged.merge(streaming_jobs.CAT)
 
     verified = load_verified_rounds()
     attempted = load_attempted()
@@ -212,8 +203,6 @@ def build_catalog() -> Catalog:
 
     ordered = Catalog()
     for name in CANARIES + rotation:
-        if name not in merged.queries:
-            continue  # canary not built yet (round-incremental)
         ordered.queries[name] = merged.queries[name]
         if name in merged.oracle:
             ordered.oracle[name] = merged.oracle[name]

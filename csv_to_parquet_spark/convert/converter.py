@@ -30,9 +30,10 @@ scan→project→write pipelined across executors, O(partition) memory.
 
 With single-file output (the CLI default) small files whose inferred
 schemas are equal, up to ``GROUP_BYTES`` together, are written by ONE
-job per group: one scan of all of them, the same projection, and a
-write partitioned by file into one part file per source, in its input
-order and byte-for-byte what the file's own write produces. Each file
+job per group: one scan of all of them, the same projection, one
+single-task sort by file and row number, and a write partitioned by
+file into one part file per source, in its input order and
+byte-for-byte what the file's own write produces. Each file
 still keeps its own schema and output; the per-file step then only
 promotes, verifies and deletes.
 """
@@ -125,20 +126,15 @@ def read_raw_header(
     return []
 
 
-def read_csv_raw(
-    spark: SparkSession,
-    path: str | list[str],
-    delimiter: str,
-    n_cols: int,
-    charset: str = "UTF-8",
-) -> DataFrame:
-    """All-string CSV scan with the reference's tolerance knobs:
-    PERMISSIVE (short rows → trailing NULLs, extra cells dropped —
-    converter.go:383-386) and STOP_AT_DELIMITER unescaped-quote handling
-    (≈ Go LazyQuotes, converter.go:194)."""
+def csv_reader(reader, delimiter: str, n_cols: int, charset: str = "UTF-8"):
+    """``reader`` (``spark.read`` or ``spark.readStream``) set up for the
+    all-string scan of ``n_cols`` columns ``_raw<i>`` in the reference's
+    CSV dialect: PERMISSIVE (short rows → trailing NULLs, extra cells
+    dropped — converter.go:383-386) and STOP_AT_DELIMITER
+    unescaped-quote handling (≈ Go LazyQuotes, converter.go:194)."""
     schema = ", ".join(f"`_raw{i}` STRING" for i in range(n_cols))
     return (
-        spark.read.option("header", True)
+        reader.option("header", True)
         .option("sep", delimiter)
         .option("mode", "PERMISSIVE")
         .option("unescapedQuoteHandling", "STOP_AT_DELIMITER")
@@ -149,8 +145,18 @@ def read_csv_raw(
         .option("encoding", charset)
         .option("enforceSchema", True)
         .schema(schema)
-        .csv(path)
     )
+
+
+def read_csv_raw(
+    spark: SparkSession,
+    path: str | list[str],
+    delimiter: str,
+    n_cols: int,
+    charset: str = "UTF-8",
+) -> DataFrame:
+    """All-string CSV scan (:func:`csv_reader`) of ``path``."""
+    return csv_reader(spark.read, delimiter, n_cols, charset).csv(path)
 
 
 def read_csv_typed(
@@ -158,7 +164,6 @@ def read_csv_typed(
     path: str,
     delimiter: str,
     cols: list[InferredColumn],
-    enhanced_dates: bool = False,
     charset: str = "UTF-8",
 ) -> DataFrame:
     """Pass 2: the conversion scan.
@@ -172,10 +177,6 @@ def read_csv_typed(
     the reference stores 5. The projection reproduces silent-NULL cast
     semantics: unparseable ⇒ NULL, empty/whitespace-only ⇒ NULL in
     every type, short rows pad, extra cells drop (PERMISSIVE).
-
-    Enhanced-dates mode changes nothing here — ``cast_column`` probes
-    the reference's six date/timestamp layouts when inference typed the
-    column date/timestamp (converter.go:264-271).
     """
     raw = read_csv_raw(spark, path, delimiter, len(cols), charset)
     return raw.select(*_typed_columns(cols))
@@ -399,9 +400,7 @@ def convert_file(
 
         target = out + "._spark_tmp" if single_file else out
         if written is None:
-            typed = read_csv_typed(
-                spark, input_file, delimiter, cols, enhanced_dates, charset
-            )
+            typed = read_csv_typed(spark, input_file, delimiter, cols, charset)
             os.makedirs(os.path.dirname(out) or ".", exist_ok=True)
             writer = typed.coalesce(1) if single_file else typed
             write = writer.write.mode("overwrite").option(
@@ -451,13 +450,12 @@ def _schema_groups(
     files: list[str],
     schemas: dict[str, list[InferredColumn] | Exception],
     max_bytes: int,
-    max_files: int,
 ) -> list[list[str]]:
     """Files to write together: same cleaned column names and kinds in
-    order, packed in file order into groups of at most ``max_bytes``
-    and ``max_files`` files, so a file larger than ``max_bytes`` never
-    joins a group. Files that failed inference, have no columns or end
-    up alone are not in any group."""
+    order, packed in file order into groups of at most ``max_bytes``,
+    so a file larger than ``max_bytes`` never joins a group. Files that
+    failed inference, have no columns or end up alone are not in any
+    group."""
     by_schema: dict[tuple, list[str]] = {}
     for f in files:
         cols = schemas[f]
@@ -475,24 +473,13 @@ def _schema_groups(
                 continue
             if n > max_bytes:
                 continue
-            if size + n > max_bytes or len(group) >= max_files:
+            if size + n > max_bytes:
                 groups.append(group)
                 group, size = [], 0
             group.append(f)
             size += n
         groups.append(group)
     return [g for g in groups if len(g) > 1]
-
-
-def _writers_per_write(heap: int, max_concurrent: int) -> int:
-    """The parquet writers one of ``max_concurrent`` concurrent writes
-    may keep open. Parquet's memory manager reserves one row group
-    (``ROW_GROUP_BYTES``) per open writer in a pool of 95 % of the
-    heap, and once the pool is over-committed it shrinks EVERY open
-    writer's row groups, a concurrent large file's included. A group
-    write keeps one writer per member open, so the pool is split
-    evenly between the writes in flight."""
-    return int(0.95 * heap) // ROW_GROUP_BYTES // max_concurrent
 
 
 def _write_group(
@@ -506,11 +493,18 @@ def _write_group(
     """Write same-schema files in ONE Spark job: one raw scan of all of
     them (``header`` drops each file's own header), the same typed
     projection as :func:`read_csv_typed`, and a ``coalesce(1)`` write
-    partitioned by a small-integer file tag into ``target``. Each
-    member's rows land in its own part file, in input order, encoded as
-    the per-file write would encode them; the partition column is not
-    stored in the file. Returns member → its partition directory; a
-    member without one (no data rows) is absent."""
+    partitioned by a small-integer file tag into ``target``.
+
+    The one task numbers its rows in scan order, which within a file is
+    input order, and sorts them by (tag, number): the write's required
+    order by tag is then met, so Spark adds no sort of its own and
+    writes one member at a time through one open parquet writer. Each
+    member's rows land in its own part file, in input order because the
+    sort key says so, encoded as the per-file write would encode them;
+    neither the tag nor the number is stored in the file. The sort
+    holds at most ``GROUP_BYTES`` of input. Returns member → its
+    partition directory; a member without one (no data rows) is
+    absent."""
     raw = read_csv_raw(spark, members, delimiter, len(cols), charset)
     # Spark's file names are URI-escaped ('%' → %25, ' ' → %20): map
     # them back through the scan's own file list
@@ -524,15 +518,18 @@ def _write_group(
         if name is not None:  # else its rows get no tag: it writes alone
             keys += [F.lit(name), F.lit(i)]
     taken = {c.name.lower() for c in cols}
-    tag = "file"
-    while tag in taken:
-        tag += "_"
+    tag, seq = "file", "file_seq"
+    while tag in taken or seq in taken:
+        tag, seq = tag + "_", seq + "_"
     typed = raw.select(
         *_typed_columns(cols),
         F.create_map(*keys)[F.col("_metadata.file_name")].alias(tag),
     )
     (
         typed.coalesce(1)
+        .withColumn(seq, F.monotonically_increasing_id())
+        .sortWithinPartitions(tag, seq)
+        .drop(seq)
         .write.partitionBy(tag)
         .option("parquet.block.size", ROW_GROUP_BYTES)
         .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
@@ -542,18 +539,11 @@ def _write_group(
     return {f: d for f, d in parts.items() if os.path.isdir(d)}
 
 
-#: The session conf that lets a partitioned write keep one open writer
-#: per partition value instead of sorting its input by partition.
-_CONCURRENT_WRITERS = "spark.sql.maxConcurrentOutputFileWriters"
-
-
 @contextmanager
-def _group_staging(spark: SparkSession, out_dir: str, groups: list[list[str]]):
+def _group_staging(out_dir: str, groups: list[list[str]]):
     """A staging directory beside the outputs (same filesystem, so each
-    promote is one ``os.replace``), with the session's concurrent-writer
-    cap at least the largest group's size while the group writes run;
-    both undone on exit. Yields None, and changes nothing, when there
-    is no group or the directory cannot be made."""
+    promote is one ``os.replace``), removed on exit. Yields None when
+    there is no group or the directory cannot be made."""
     if not groups:
         yield None
         return
@@ -564,16 +554,9 @@ def _group_staging(spark: SparkSession, out_dir: str, groups: list[list[str]]):
         log.warning("cannot stage group writes in %s: %s", out_dir, e)
         yield None
         return
-    caller = spark.conf.get(_CONCURRENT_WRITERS, None)
-    largest = max(len(g) for g in groups)
-    spark.conf.set(_CONCURRENT_WRITERS, str(max(largest, int(caller or 0))))
     try:
         yield stage
     finally:
-        if caller is None:
-            spark.conf.unset(_CONCURRENT_WRITERS)
-        else:
-            spark.conf.set(_CONCURRENT_WRITERS, caller)
         shutil.rmtree(stage, ignore_errors=True)
 
 
@@ -586,13 +569,12 @@ def convert_all(
     delete_original: bool = False,
     single_file: bool = True,
     enhanced_dates: bool = False,
-    max_concurrent: int = MAX_CONCURRENT_FILES,
     charset: str = "UTF-8",
 ) -> Summary:
     """Convert a file or a directory of CSVs (reference ConvertAll,
     converter.go:66-105): each file keeps its own inferred schema and
     output, all of them inferred by one Spark job before any write
-    starts, then up to ``max_concurrent`` write jobs in flight.
+    starts, then up to ``MAX_CONCURRENT_FILES`` write jobs in flight.
 
     With ``single_file`` (the CLI default) small files of the same
     schema, at most ``GROUP_BYTES`` together, are written by one job
@@ -610,23 +592,12 @@ def convert_all(
     schemas = infer_file_schemas(
         spark, files, delimiter, sample_rows, enhanced_dates, charset
     )
-    groups: list[list[str]] = []
-    if single_file:
-        # at most one scan split, which one task takes
-        split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
-        # the driver JVM's heap: the executors' too in local mode
-        heap = spark._jvm.java.lang.Runtime.getRuntime().maxMemory()
-        groups = _schema_groups(
-            files,
-            schemas,
-            min(GROUP_BYTES, split),
-            _writers_per_write(heap, max_concurrent),
-        )
+    groups = _schema_groups(files, schemas, GROUP_BYTES) if single_file else []
     grouped = {f for g in groups for f in g}
     units = groups + [[f] for f in files if f not in grouped]
     out_dir = os.path.dirname(output_path_for(files[0], output_dir)) or "."
 
-    with _group_staging(spark, out_dir, groups) as stage:
+    with _group_staging(out_dir, groups) as stage:
 
         def _unit(i: int, members: list[str]) -> list[Result]:
             written: dict[str, str] = {}
@@ -666,7 +637,7 @@ def convert_all(
                 for f in members
             ]
 
-        with ThreadPoolExecutor(max_workers=max_concurrent) as pool:
+        with ThreadPoolExecutor(max_workers=MAX_CONCURRENT_FILES) as pool:
             done = list(pool.map(_unit, range(len(units)), units))
     by_file = {r.input: r for rs in done for r in rs}
     results = [by_file[f] for f in files]

@@ -53,17 +53,6 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    BooleanType,
-    DataType,
-    DateType,
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampNTZType,
-)
 
 # the reference's six probed layouts, converter/converter.go:264-271
 # (Go layout → Spark datetime pattern), probe order preserved: DD/MM
@@ -81,17 +70,6 @@ class InferredColumn:
     name: str  # cleaned name
     raw_name: str  # name as it appears in the CSV header
     kind: str  # int64 | float64 | bool | string | date | timestamp
-
-    @property
-    def spark_type(self) -> DataType:
-        return {
-            "int64": LongType(),
-            "float64": DoubleType(),
-            "bool": BooleanType(),
-            "string": StringType(),
-            "date": DateType(),
-            "timestamp": TimestampNTZType(),
-        }[self.kind]
 
 
 #: kind of a column with no non-empty sample cell (converter.go:214-217)
@@ -234,12 +212,6 @@ def cast_column(kind: str, name: str) -> F.Column:
             *[F.try_to_timestamp(v, F.lit(p)) for p in TIMESTAMP_PATTERNS]
         ).cast("timestamp_ntz")
     return v  # string
-
-
-def to_struct_type(cols: list[InferredColumn]) -> StructType:
-    # every field nullable — parquet repetitiontype=OPTIONAL parity
-    # (converter/converter.go:308)
-    return StructType([StructField(c.name, c.spark_type, True) for c in cols])
 
 
 def format_schema(cols: list[InferredColumn]) -> str:

@@ -30,27 +30,3 @@ def n_ops(plan: str, op: str) -> int:
     ``BroadcastExchange``."""
     return len(re.findall(rf"^\(\d+\) {op}\b", plan, flags=re.M))
 
-
-def pushed_filters(plan: str) -> str:
-    """The PushedFilters[...] clause of the first scan, '' if none."""
-    m = re.search(r"PushedFilters: \[(.*?)\]", plan)
-    return m.group(1) if m else ""
-
-
-def partition_filters(plan: str) -> str:
-    """The PartitionFilters[...] clause of the first scan, '' if none."""
-    m = re.search(r"PartitionFilters: \[(.*?)\]", plan)
-    return m.group(1) if m else ""
-
-
-def read_schema(plan: str) -> str:
-    """The ReadSchema clause of the first scan — what columns actually
-    leave the parquet reader (column pruning check)."""
-    m = re.search(r"ReadSchema: (.*)", plan)
-    return m.group(1) if m else ""
-
-
-def uses_python(plan: str) -> bool:
-    """True if any Python-evaluation operator appears (Batch/Arrow
-    EvalPython) — the scalar suites must keep this False."""
-    return "EvalPython" in plan

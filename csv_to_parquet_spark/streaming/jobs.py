@@ -1060,6 +1060,21 @@ def stream_foreach_batch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def watch_folder_stream(spark: SparkSession, in_dir: str, cols: list) -> DataFrame:
+    """The typed stream of the CSVs landing in ``in_dir``: the
+    converter's own reader and trim/try_cast projection, so a file
+    reads as ``convert_file`` reads it, each source deleted once its
+    batch commits."""
+    from csv_to_parquet_spark.convert.converter import _typed_columns, csv_reader
+
+    return (
+        csv_reader(spark.readStream, ",", len(cols))
+        .option("cleanSource", "delete")
+        .csv(in_dir)
+        .select(*_typed_columns(cols))
+    )
+
+
 @CAT.query(
     "stream_convert_watch_folder",
     oracle="""
@@ -1075,7 +1090,6 @@ def stream_convert_watch_folder(spark: SparkSession, sf_dir: str) -> DataFrame:
     delete_original (converter/converter.go:169-175). availableNow
     drains the three staged files deterministically."""
     from csv_to_parquet_spark.convert.converter import infer_file_schema
-    from csv_to_parquet_spark.convert.inference import cast_column, to_struct_type
 
     base = tempfile.mkdtemp(prefix="watchfolder_")
     in_dir = os.path.join(base, "in")
@@ -1090,18 +1104,7 @@ def stream_convert_watch_folder(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f.write(f"{i},{i * 7},u{i % 10}\n")
 
     cols = infer_file_schema(spark, os.path.join(in_dir, "chunk0.csv"))
-    raw_schema = to_struct_type(
-        [type(c)(name=f"_raw{j}", raw_name=c.raw_name, kind="string") for j, c in enumerate(cols)]
-    )
-    src = (
-        spark.readStream.schema(raw_schema)
-        .option("header", True)
-        .option("cleanSource", "delete")
-        .csv(in_dir)
-    )
-    typed = src.select(
-        *[cast_column(c.kind, f"_raw{j}").alias(c.name) for j, c in enumerate(cols)]
-    )
+    typed = watch_folder_stream(spark, in_dir, cols)
     q = (
         typed.writeStream.format("parquet")
         .option("path", out_dir)

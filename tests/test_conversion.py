@@ -772,7 +772,8 @@ def test_grouped_write_equals_per_file_write(spark, tmp_path, monkeypatch, enhan
 
 def test_grouped_write_keeps_row_order(spark, tmp_path, monkeypatch):
     """Ids written ascending stay ascending, also when each file spans
-    several scan splits."""
+    several scan splits: split by the open cost, or by a split size
+    smaller than a file, which still writes the files as one group."""
     import pyarrow.parquet as pq
 
     d = tmp_path / "batch"
@@ -781,39 +782,51 @@ def test_grouped_write_keeps_row_order(spark, tmp_path, monkeypatch):
     for k in range(3):
         rows = "".join(f"{i},{(i * 7919) % 1000},v{i % 13}\n" for i in range(k, k + n))
         _write(d, f"f{k}.csv", "id,h,s\n" + rows)
-    written = _spy_group_writes(monkeypatch)
-    key = "spark.sql.files.openCostInBytes"
-    before = spark.conf.get(key, None)
-    spark.conf.set(key, str(64 * 1024))  # split each ~200 KB file
-    try:
-        summary = convert_all(spark, str(d), str(tmp_path / "out"))
-    finally:
-        spark.conf.unset(key) if before is None else spark.conf.set(key, before)
-    assert summary.failed == 0 and len(written) == 1 and len(written[0]) == 3
-    for k, r in enumerate(sorted(summary.results, key=lambda r: r.input)):
-        ids = pq.read_table(r.output).column("id").to_pylist()
-        assert ids == list(range(k, k + n))
+    for key in ("spark.sql.files.openCostInBytes", "spark.sql.files.maxPartitionBytes"):
+        before = spark.conf.get(key, None)
+        spark.conf.set(key, str(64 * 1024))  # split each ~200 KB file
+        try:
+            with monkeypatch.context() as m:
+                written = _spy_group_writes(m)
+                summary = convert_all(spark, str(d), str(tmp_path / key))
+        finally:
+            spark.conf.unset(key) if before is None else spark.conf.set(key, before)
+        assert summary.failed == 0 and len(written) == 1 and len(written[0]) == 3, key
+        for k, r in enumerate(sorted(summary.results, key=lambda r: r.input)):
+            ids = pq.read_table(r.output).column("id").to_pylist()
+            assert ids == list(range(k, k + n)), key
 
 
 def test_same_schema_files_write_in_one_job(spark, tmp_path, monkeypatch):
-    d = tmp_path / "batch"
-    d.mkdir()
-    k = 5
-    for i in range(k):
-        _write(d, f"f{i}.csv", "a,b,c\n" + f"{i},x{i},{i}.5\n" * (i + 1))
-    out = tmp_path / "out"
-    summary, jobs = _group_jobs(
-        spark, monkeypatch, lambda: convert_all(spark, str(d), str(out))
-    )
-    assert summary.converted == k
-    assert len(jobs) == 2, jobs  # the shared sample and the group write
-    assert sorted(os.listdir(out)) == [f"f{i}.parquet" for i in range(k)]
-    store = spark._jsparkSession.sharedState().statusStore()
-    last = store.executionsList(max(store.executionsCount() - 4, 0), 4)
-    plans = [last.apply(i).physicalPlanDescription() for i in range(last.size())]
-    (plan,) = [p for p in plans if f"{out}/._spark_groups-" in p]
-    assert "WriteFiles" in plan and "Coalesce" in plan
-    assert re.search(r"\bSort\b", plan) is None, plan
+    """Also for 32 files, more than parquet's writer pool could hold
+    open at once: the sorted write keeps one writer open."""
+    from csv_to_parquet_spark.plans.inspect import n_ops
+
+    for k in (5, 32):
+        d = tmp_path / f"batch{k}"
+        d.mkdir()
+        for i in range(k):
+            _write(d, f"f{i}.csv", "a,b,c\n" + f"{i},x{i},{i}.5\n" * (i + 1))
+        out = tmp_path / f"out{k}"
+        with monkeypatch.context() as m:
+            summary, jobs = _group_jobs(
+                spark, m, lambda: convert_all(spark, str(d), str(out))
+            )
+        assert summary.converted == k
+        assert len(jobs) == 2, (k, jobs)  # the shared sample and the group write
+        assert sorted(os.listdir(out)) == sorted(f"f{i}.parquet" for i in range(k))
+        store = spark._jsparkSession.sharedState().statusStore()
+        last = store.executionsList(max(store.executionsCount() - 4, 0), 4)
+        plans = [last.apply(i).physicalPlanDescription() for i in range(last.size())]
+        (plan,) = [p for p in plans if f"{out}/._spark_groups-" in p]
+        assert "WriteFiles" in plan and "Coalesce" in plan
+        # one sort, by file tag then row number, and no shuffle
+        assert n_ops(plan, "Sort") == 1 and n_ops(plan, "Exchange") == 0, plan
+        assert re.search(
+            r"^Arguments: \[file#\d+ ASC NULLS FIRST, file_seq#\d+L ASC NULLS FIRST\]",
+            plan,
+            flags=re.M,
+        ), plan
 
 
 def test_failed_group_write_converts_each_file_alone(spark, tmp_path, monkeypatch):
@@ -854,37 +867,42 @@ def test_grouped_awkward_names_and_header_only_member(spark, tmp_path, monkeypat
 
 
 @pytest.mark.parametrize("caller", [None, "2", "64"])
-def test_concurrent_writer_conf_is_scoped_to_the_group_writes(
-    spark, tmp_path, monkeypatch, caller
-):
+def test_group_writes_leave_the_writer_conf_alone(spark, tmp_path, monkeypatch, caller):
+    """The group writes run under the caller's
+    ``maxConcurrentOutputFileWriters``, and a pool that raises still
+    removes the staging directory."""
     key = "spark.sql.maxConcurrentOutputFileWriters"
     d = tmp_path / "batch"
     d.mkdir()
     for i in range(3):
         _write(d, f"f{i}.csv", f"a\n{i}\n")
+    out = tmp_path / "out"
     during = []
     original = conv._write_group
 
     def spy(spark_, *a):
-        during.append(spark_.conf.get(key))
+        during.append(spark_.conf.get(key, None))
         return original(spark_, *a)
 
     monkeypatch.setattr(conv, "_write_group", spy)
     if caller is not None:
         spark.conf.set(key, caller)
+    before = spark.conf.get(key, None)
     try:
-        assert convert_all(spark, str(d), str(tmp_path / "out")).converted == 3
-        assert during == [str(max(3, int(caller or 0)))]
-        assert spark.conf.get(key, None) == caller
-        # also restored, and the staging gone, when the pool raises
+        summary = convert_all(spark, str(d), str(out))
+        assert summary.converted == 3
+        assert during == [before] and spark.conf.get(key, None) == before
+        for i, r in enumerate(summary.results):
+            assert [tuple(x) for x in spark.read.parquet(r.output).collect()] == [(i,)]
+
         def failing_convert(*a, **kw):
             raise RuntimeError("planted convert failure")
 
         monkeypatch.setattr(conv, "convert_file", failing_convert)
         with pytest.raises(RuntimeError, match="planted convert failure"):
-            convert_all(spark, str(d), str(tmp_path / "out"))
-        assert spark.conf.get(key, None) == caller
-        assert sorted(os.listdir(tmp_path / "out")) == ["f0.parquet", "f1.parquet", "f2.parquet"]
+            convert_all(spark, str(d), str(out))
+        assert len(during) == 2
+        assert sorted(os.listdir(out)) == ["f0.parquet", "f1.parquet", "f2.parquet"]
     finally:
         spark.conf.unset(key)
 
@@ -898,31 +916,14 @@ def test_schema_groups_cap_bytes_and_files(tmp_path):
     files = [_write(tmp_path, f"{n}.csv", b"x" * size) for n, size in sizes.items()]
     schemas = dict(zip(files, [ab] * 5 + [ba, ba, RuntimeError("failed")]))
     names = lambda groups: [[os.path.basename(f)[:2] for f in g] for g in groups]  # noqa: E731
-    # f3 is larger than one split; f0-f2 overflow the byte cap
-    assert names(_schema_groups(files, schemas, 100, 10)) == [
+    # f3 is larger than the cap; f0-f2 overflow it
+    assert names(_schema_groups(files, schemas, 100)) == [
         ["f0", "f1"], ["f2", "f4"], ["g0", "g1"],
     ]
-    assert names(_schema_groups(files, schemas, 1000, 3)) == [
-        ["f0", "f1", "f2"], ["f3", "f4"], ["g0", "g1"],
+    assert names(_schema_groups(files, schemas, 1000)) == [
+        ["f0", "f1", "f2", "f3", "f4"], ["g0", "g1"],
     ]
-    assert _schema_groups(files, schemas, 1000, 1) == []
-    assert _schema_groups(files, schemas, 1000, 0) == []
-
-
-def test_writer_budget_splits_the_pool_between_concurrent_writes():
-    """Every write in flight keeping its whole budget of open writers
-    stays within parquet's pool (95 % of the heap, one row group per
-    writer), so no writer's row groups shrink."""
-    from csv_to_parquet_spark.convert.converter import ROW_GROUP_BYTES, _writers_per_write
-
-    gib = 1 << 30
-    assert _writers_per_write(8 * gib, 4) == 15
-    assert _writers_per_write(8 * gib, 1) == 60
-    assert _writers_per_write(1 * gib, 4) == 1  # too small a heap to group
-    for heap in (1 * gib, 2 * gib, 8 * gib, 13 * gib):
-        for concurrent in (1, 3, 4, 8):
-            budget = _writers_per_write(heap, concurrent)
-            assert concurrent * budget * ROW_GROUP_BYTES <= 0.95 * heap
+    assert _schema_groups(files, schemas, 5) == []  # every file alone
 
 
 def test_group_cap_leaves_larger_files_to_the_pool(spark, tmp_path, monkeypatch):
@@ -941,3 +942,48 @@ def test_group_cap_leaves_larger_files_to_the_pool(spark, tmp_path, monkeypatch)
     assert summary.failed == 0 and summary.converted == 5
     assert [sorted(os.path.basename(f) for f in w) for w in written] == [["d.csv", "e.csv"]]
     assert sorted(os.listdir(tmp_path / "out")) == [f"{n}.parquet" for n in "abcde"]
+
+
+def test_watch_folder_stream_reads_as_the_file_scan(spark, tmp_path):
+    """The watch-folder stream reads a CSV in the reference's dialect,
+    exactly as ``convert_file``'s scan does."""
+    from csv_to_parquet_spark.streaming.jobs import watch_folder_stream
+
+    body = (
+        "id,text,tag\n"
+        '1,"a,b",x\n'  # quoted delimiter
+        '2,"with""esc",y\n'  # doubled quote
+        '3,un"quoted,z\n'  # unescaped quote
+        "4,short\n"  # short row
+        "5,extra,w,more\n"  # extra cell
+        "6,   ,v\n"  # whitespace-only cell
+    )
+    src = _write(tmp_path, "fixture.csv", body)
+    cols = infer_file_schema(spark, src)
+    batch = conv.read_csv_typed(spark, src, ",", cols).collect()
+    watch = tmp_path / "watch"
+    watch.mkdir()
+    _write(watch, "fixture.csv", body)
+    name = f"watch_{uuid.uuid4().hex}"
+    q = (
+        watch_folder_stream(spark, str(watch), cols)
+        .writeStream.format("memory")
+        .queryName(name)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    try:
+        streamed = spark.table(name).collect()
+    finally:
+        spark.catalog.dropTempView(name)
+    assert streamed == batch
+    assert [tuple(r) for r in batch] == [
+        (1, "a,b", "x"),
+        (2, 'with"esc', "y"),
+        (3, 'un"quoted', "z"),
+        (4, "short", None),
+        (5, "extra", "w"),
+        (6, None, "v"),
+    ]

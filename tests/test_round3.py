@@ -39,6 +39,24 @@ def test_rotation_window_covers_never_verified(spark):
     assert len(never) > 45 or not missing, f"outside window: {missing}"
 
 
+def test_build_catalog_raises_on_a_broken_module(monkeypatch):
+    """A module that fails to import fails the catalog instead of
+    silently dropping its entries."""
+    import sys
+
+    import pytest
+
+    from csv_to_parquet_spark import catalog, operators, streaming
+
+    for pkg, mod in ((operators, "graph"), (streaming, "jobs")):
+        with monkeypatch.context() as m:
+            m.delattr(pkg, mod, raising=False)
+            m.setitem(sys.modules, f"{pkg.__name__}.{mod}", None)
+            with pytest.raises(ImportError):
+                catalog.build_catalog()
+    assert len(catalog.build_catalog().queries) == 340
+
+
 def test_verified_rounds_snapshot_loads():
     from csv_to_parquet_spark import catalog
 
